@@ -8,20 +8,88 @@ import org.apache.spark.sql.SparkSession
   * query must not masquerade as a fast one).
   */
 object Bench {
+  // best-of-N per query (default 3): a single pass conflates the query's
+  // cost with whatever the machine was doing that second — the round-7
+  // official run recorded +12.7% over the same code's local runs on
+  // nothing but ambient load. The MIN of back-to-back runs is the
+  // standard low-noise estimator for a deterministic workload (page
+  // cache and broadcast reuse help later runs, which is exactly the
+  // warmed steady state a long-lived cluster serves from). Default was
+  // raised 2→3 after the r16 official board recorded 7.44 s for a query
+  // whose 5-rep converged cost is 0.73 s — even warmup + best-of-2 can
+  // carry multi-second cold-JIT phantom; see also the per-query
+  // `suspect` flag below.
+  def repsFromEnv: Int = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3).max(1)
+  // untimed warm-up executions per query BEFORE the timed reps (default 1,
+  // SPARK_GRAFT_BENCH_WARMUP=0 restores the old behavior). Evidence this
+  // is needed: the r10 official board recorded a 49.6 s rep-1 vs 7.5 s
+  // rep-2 on dedup_substr_clean (JIT + cold page cache), and whole boards
+  // have run ~29% hotter official than builder-side on identical code.
+  // The warm-up run JITs the query's codegen classes and faults its
+  // parquet footers/pages into cache, so the timed reps measure the
+  // steady state a long-lived cluster actually serves from.
+  def warmupFromEnv: Int = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").map(_.toInt).getOrElse(1).max(0)
+
+  // machine-load telemetry: without it a judge cannot separate
+  // driver-machine load from real regressions (four of r9's six flagged
+  // "regressions" evaporated with zero code change)
+  def loadavg1: Double =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  // a JSON string literal, and a locale-independent 3-decimal number
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+  def n3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** One query's measurement: `sec` is the best timed run, or the time of
+    * the first failing run with its `error`; `runs` and `loads` carry every
+    * run's time and the 1-min loadavg sampled at its start.
+    */
+  final case class Timing(query: String, sec: Double, error: Option[String],
+      runs: Seq[Double], loads: Seq[Double])
+
+  /** `warmup` untimed runs of query `name`, then `reps` timed ones, each
+    * into the noop sink (a bare count() would let Catalyst prune the
+    * projections we mean to measure).
+    */
+  def timeQuery(spark: SparkSession, sfDir: String, name: String,
+      warmup: Int, reps: Int): Timing = {
+    val fn = SparkEntry.queries(name)
+    // (seconds, error, loadavg at start) of one run
+    def once(): (Double, Option[String], Double) = {
+      val la = loadavg1
+      val t0 = System.nanoTime()
+      val err =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        // 120 chars: ten of these at once must still leave the stdout
+        // line inside the driver's tail-capture window (r9 lost its
+        // entire bench artifact to untruncated AnalysisExceptions)
+        catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}") }
+      ((System.nanoTime() - t0) / 1e9, err, la)
+    }
+    // a warm-up failure is the query failing — record it WITH the
+    // elapsed time of the failing attempt (a 0.0 would misread as
+    // "instant"), skip the reps; the single runs/loadavg entry then
+    // describes the failed warm-up run itself
+    val warmFail = Iterator.fill(warmup)(once()).find(_._2.isDefined)
+    val runs = warmFail.map(Seq(_)).getOrElse((1 to reps).map(_ => once()))
+    // a query that errored must not masquerade as fast: report the first
+    // error and the time of the run that produced it
+    runs.find(_._2.isDefined) match {
+      case Some((t, err, _)) => Timing(name, t, err, runs.map(_._1), runs.map(_._3))
+      case None => Timing(name, runs.map(_._1).min, None, runs.map(_._1), runs.map(_._3))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the bounded side-table windows (histogram
-    // percentiles, packing bucket offsets) trip WindowExec's
-    // single-partition warning on every task, drowning the metrics line
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
+    val spark = Session()
 
     // session warmup (JVM + codegen + parquet reader init) so the first
     // measured query isn't charged one-time startup cost
@@ -32,88 +100,17 @@ object Bench {
     val requested = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(SparkEntry.benchQueries)
-    // best-of-N per query (default 3): a single pass conflates the query's
-    // cost with whatever the machine was doing that second — the round-7
-    // official run recorded +12.7% over the same code's local runs on
-    // nothing but ambient load. The MIN of back-to-back runs is the
-    // standard low-noise estimator for a deterministic workload (page
-    // cache and broadcast reuse help later runs, which is exactly the
-    // warmed steady state a long-lived cluster serves from). Default was
-    // raised 2→3 after the r16 official board recorded 7.44 s for a query
-    // whose 5-rep converged cost is 0.73 s — even warmup + best-of-2 can
-    // carry multi-second cold-JIT phantom; see also the per-query
-    // `suspect` flag below.
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3).max(1)
-    // untimed warm-up executions per query BEFORE the timed reps (default 1,
-    // SPARK_GRAFT_BENCH_WARMUP=0 restores the old behavior). Evidence this
-    // is needed: the r10 official board recorded a 49.6 s rep-1 vs 7.5 s
-    // rep-2 on dedup_substr_clean (JIT + cold page cache), and whole boards
-    // have run ~29% hotter official than builder-side on identical code.
-    // The warm-up run JITs the query's codegen classes and faults its
-    // parquet footers/pages into cache, so the timed reps measure the
-    // steady state a long-lived cluster actually serves from.
-    val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").map(_.toInt).getOrElse(1).max(0)
-    // machine-load telemetry: without it a judge cannot separate
-    // driver-machine load from real regressions (four of r9's six flagged
-    // "regressions" evaporated with zero code change)
-    def loadavg1: Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    val (reps, warmup) = (repsFromEnv, warmupFromEnv)
     val loadStart = loadavg1
     // unknown names are reported, not silently dropped — a typo must not
     // produce a clean-looking result that measured nothing
     val (names, unknown) = requested.partition(SparkEntry.queries.contains)
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      // noop sink forces full evaluation of every column (a bare count()
-      // would let Catalyst prune the projections we mean to measure)
-      def once(): Option[String] =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        // 120 chars: ten of these at once must still leave the stdout
-        // line inside the driver's tail-capture window (r9 lost its
-        // entire bench artifact to untruncated AnalysisExceptions)
-        catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}") }
-      // a warm-up failure is the query failing — record it WITH the
-      // elapsed time of the failing attempt (a 0.0 would misread as
-      // "instant"), skip the reps; the single runs/loadavg entry then
-      // describes the failed warm-up run itself
-      var warmFail: Option[(Double, String, Double)] = None
-      var wi = 0
-      while (wi < warmup && warmFail.isEmpty) {
-        val la = loadavg1
-        val t0 = System.nanoTime()
-        once().foreach(e => warmFail = Some(((System.nanoTime() - t0) / 1e9, e, la)))
-        wi += 1
-      }
-      val runs = warmFail match {
-        case Some((t, e, la)) => Seq((t, Some(e), la))
-        case None => (1 to reps).map { _ =>
-          val la = loadavg1
-          val t0 = System.nanoTime()
-          val err = once()
-          ((System.nanoTime() - t0) / 1e9, err, la)
-        }
-      }
-      // a query that errored must not masquerade as fast: report the first
-      // error and the time of the run that produced it
-      runs.find(_._2.isDefined) match {
-        case Some((t, err, _)) => (name, t, err, runs.map(_._1), runs.map(_._3))
-        case None => (name, runs.map(_._1).min, None, runs.map(_._1), runs.map(_._3))
-      }
-    }
+    val results = names.map(timeQuery(spark, sfDir, _, warmup, reps))
     val loadEnd = loadavg1
     val uptimeSec = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    def n3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qsFull = results.map { case (k, v, _, _, _) => s"${jstr(k)}:$v" }
+    val qsFull = results.map { case Timing(k, v, _, _, _) => s"${jstr(k)}:$v" }
       .mkString("{", ",", "}")
-    val allErrs = results.collect { case (k, _, Some(e), _, _) => (k, e) } ++
+    val allErrs = results.collect { case Timing(k, _, Some(e), _, _) => (k, e) } ++
       unknown.map(k => (k, "unknown query name"))
     // the stdout line must stay inside the driver's tail-capture window no
     // matter how many queries error (r9: 10 errors → line too long →
@@ -123,19 +120,19 @@ object Bench {
       (if (allErrs.size > 5) Seq(s"${jstr("_truncated")}:${jstr(s"${allErrs.size - 5} more, see target/bench.json")}") else Nil))
       .mkString("{", ",", "}")
     val errsFull = allErrs.map { case (k, e) => s"${jstr(k)}:${jstr(e)}" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = results.map(_.sec).sum
     // methodology is disclosed IN the record: `reps` names the estimator
     // (min of N back-to-back runs) and `runs` carries every per-run time,
     // so a consumer can recompute one-shot numbers (first element) or see
     // the spread instead of trusting an opaque minimum. `runs` lives only
     // in the FILE copy — on stdout it would double the line length and
     // risk the tail window that already ate one round's artifact.
-    val runsJson = results.map { case (k, _, _, rs, _) =>
+    val runsJson = results.map { case Timing(k, _, _, rs, _) =>
       s"${jstr(k)}:${rs.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     // 1-min loadavg sampled at the start of each timed rep — the file copy
     // carries the per-rep series; stdout carries board start/end + uptime
-    val loadJson = results.map { case (k, _, _, _, ls) =>
+    val loadJson = results.map { case Timing(k, _, _, _, ls) =>
       s"${jstr(k)}:${ls.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     // per-query cold-JIT sentinel: a ≥2× spread across this query's own
@@ -144,7 +141,7 @@ object Bench {
     // the cross-round record separate plan cost from code-cache state
     // without a manual 5-rep adjudication of every mover
     val suspects = results.collect {
-      case (k, _, None, rs, _) if rs.size >= 2 && rs.min > 0.05 &&
+      case Timing(k, _, None, rs, _) if rs.size >= 2 && rs.min > 0.05 &&
         rs.max / rs.min >= 2.0 => k
     }
     val suspectJson = suspects.map(jstr).mkString("[", ",", "]")
@@ -157,9 +154,9 @@ object Bench {
     // ratio matches `drift` is machine, not code.
     val CanaryQuery = "graph_pagerank"
     val CanaryRefSec = 1.70
-    val canaryJson = results.find(r => r._1 == CanaryQuery && r._3.isEmpty)
-      .map { case (_, t, _, _, _) =>
-        s"""{"query":${jstr(CanaryQuery)},"sec":${n3(t)},"ref_sec":$CanaryRefSec,"drift":${n3(t / CanaryRefSec)}}"""
+    val canaryJson = results.find(r => r.query == CanaryQuery && r.error.isEmpty)
+      .map { r =>
+        s"""{"query":${jstr(CanaryQuery)},"sec":${n3(r.sec)},"ref_sec":$CanaryRefSec,"drift":${n3(r.sec / CanaryRefSec)}}"""
       }.getOrElse("null")
     def line(value: String, queries: String, errors: String, extra: String): String =
       s"""{"metric":"total","value":$value,"unit":"sec","reps":$reps,"warmup":$warmup,"suspect_n":${suspects.size},"load_start":${n3(loadStart)},"load_end":${n3(loadEnd)},"jvm_uptime_sec":${n3(uptimeSec)},"canary":$canaryJson,"queries":$queries$extra,"errors":$errors,"sf":${jstr(sfDir)}}"""
@@ -190,7 +187,7 @@ object Bench {
     val suspectCapped = (suspects.take(8).map(jstr) ++
       (if (suspects.size > 8) Seq(jstr(s"+${suspects.size - 8} more")) else Nil))
       .mkString("[", ",", "]")
-    val byTime = results.collect { case (k, v, None, _, _) => (k, v) }
+    val byTime = results.collect { case Timing(k, v, None, _, _) => (k, v) }
       .sortBy { case (k, v) => (-v, k) }
     def qmapInline(n: Int): String =
       (Seq(s"${jstr("_see")}:${jstr("bench_full.json")}",

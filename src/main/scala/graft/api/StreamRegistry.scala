@@ -153,11 +153,6 @@ class StreamRegistry(spark: SparkSession,
   def stream(name: String): StreamDef = defs(name)
   def names: Seq[String] = defs.keys.toSeq.sorted
 
-  /** Textual multi-statement entry — alias of [[sql]] kept for call-site
-    * clarity when passing a whole script.
-    */
-  def sqlScript(script: String): DataFrame = sql(script)
-
   /** Textual entry point — the KSQL statement surface
     * (`ksqlContext.sql(...)`, reference
     * `StreamsSelectAndProjectIntTest.java:174-344`):

@@ -377,7 +377,7 @@ object Dedup {
     // band legs) and the shingle-set pipeline twice (verifyPairs' two
     // join sides): measured at the ScaleGen 100× envelope, staged 3.98 s
     // vs re-derive 4.99 s (sf0.1: a wash, 0.91 vs 0.89 — job overhead
-    // offsets; see OptProbe `envelope`). The drop-id set materializes
+    // offsets; see tools.Probe `envelope`). The drop-id set materializes
     // eagerly so both staged frames are RELEASED before returning; the
     // returned frame reads only the drop-set-sized checkpoint (bounded
     // by the duplicate count — the one storage cost the caller keeps).

@@ -78,42 +78,43 @@ object Graph {
     var pinned = labels
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
-      labels.sparkSession.sparkContext.setJobDescription(s"cc-prop round $iter")
-      val nbrMin = sym.join(labels, col("dst") === col("id"))
-        .groupBy("src").agg(min("comp").as("nbr_min"))
-        .withColumnRenamed("src", "id")
-      val nextPlan = labels.withColumnRenamed("comp", "prev")
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("prev"),
-          least(col("prev"), coalesce(col("nbr_min"), col("prev"))).as("comp"))
-      // r22: the convergence probe RIDES the materialization job — an
-      // Observation collects the changed-row count during the checkpoint
-      // action itself, so the former per-round `filter(...).isEmpty` job
-      // is gone (guide §2.6: one fewer action per round; same decision,
-      // the count of comp<prev rows is 0 ⟺ the old limit-1 probe found
-      // nothing). Observation requires the SQL-tracked localCheckpoint
-      // action; the reliable-checkpoint upgrade path keeps the probe job.
-      val (next, chg) = checkpointDir match {
-        case None =>
-          val obs = org.apache.spark.sql.Observation()
-          val n = Lineage.materialize(nextPlan.observe(obs,
-            count(when(col("comp") < col("prev"), 1)).as("chg")))
-          (n, obs.get("chg").asInstanceOf[Long])
-        case _ =>
-          val n = Lineage.materialize(nextPlan, checkpointDir)
-          (n, if (n.filter(col("comp") < col("prev")).isEmpty) 0L else 1L)
+    Lineage.keepingJobDescription(sym.sparkSession.sparkContext) {
+      while (!converged && iter < maxIter) {
+        labels.sparkSession.sparkContext.setJobDescription(s"cc-prop round $iter")
+        val nbrMin = sym.join(labels, col("dst") === col("id"))
+          .groupBy("src").agg(min("comp").as("nbr_min"))
+          .withColumnRenamed("src", "id")
+        val nextPlan = labels.withColumnRenamed("comp", "prev")
+          .join(nbrMin, Seq("id"), "left")
+          .select(col("id"), col("prev"),
+            least(col("prev"), coalesce(col("nbr_min"), col("prev"))).as("comp"))
+        // r22: the convergence probe RIDES the materialization job — an
+        // Observation collects the changed-row count during the checkpoint
+        // action itself, so the former per-round `filter(...).isEmpty` job
+        // is gone (guide §2.6: one fewer action per round; same decision,
+        // the count of comp<prev rows is 0 ⟺ the old limit-1 probe found
+        // nothing). Observation requires the SQL-tracked localCheckpoint
+        // action; the reliable-checkpoint upgrade path keeps the probe job.
+        val (next, chg) = checkpointDir match {
+          case None =>
+            val obs = org.apache.spark.sql.Observation()
+            val n = Lineage.materialize(nextPlan.observe(obs,
+              count(when(col("comp") < col("prev"), 1)).as("chg")))
+            (n, obs.get("chg").asInstanceOf[Long])
+          case _ =>
+            val n = Lineage.materialize(nextPlan, checkpointDir)
+            (n, if (n.filter(col("comp") < col("prev")).isEmpty) 0L else 1L)
+        }
+        converged = chg == 0L
+        // `next` is eagerly materialized and the convergence probe read only
+        // `next` — the previous round's labels are now superseded: release
+        // their blocks instead of letting O(diameter) label tables pile up
+        Lineage.release(pinned)
+        pinned = next
+        labels = next.select("id", "comp")
+        iter += 1
       }
-      converged = chg == 0L
-      // `next` is eagerly materialized and the convergence probe read only
-      // `next` — the previous round's labels are now superseded: release
-      // their blocks instead of letting O(diameter) label tables pile up
-      Lineage.release(pinned)
-      pinned = next
-      labels = next.select("id", "comp")
-      iter += 1
     }
-    labels.sparkSession.sparkContext.setJobDescription(null)
     sym.unpersist()
     Lineage.release(e) // safe now: nothing can recompute sym from it
     if (!converged)
@@ -303,41 +304,42 @@ object Graph {
     var curCnt = cur.count()
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
-      cur.sparkSession.sparkContext.setJobDescription(s"cc-star round $iter")
-      // two-tier fixed-point probe, replacing the former two exceptAll
-      // passes (~4 wide shuffles per round): (1) COUNT — both sides are
-      // DISTINCT edge sets (symmetrize ends in .distinct()), so unequal
-      // cardinality proves change; r22: the count RIDES the
-      // materialization job via an Observation (guide §2.6 — the former
-      // per-round count() job over the cached partitions is gone; the
-      // reliable-checkpoint upgrade path keeps it, Observation needs the
-      // SQL-tracked localCheckpoint action); (2) only equal counts
-      // (typically just the final round) pay a single full-outer join,
-      // where set equality ⟺ no one-sided row (limit-1 probe).
-      val (next, nextCnt) = checkpointDir match {
-        case None =>
-          val obs = org.apache.spark.sql.Observation()
-          val n = Lineage.materialize(smallStar(largeStar(cur))
-            .observe(obs, count(lit(1)).as("n")))
-          (n, obs.get("n").asInstanceOf[Long])
-        case _ =>
-          val n = Lineage.materialize(smallStar(largeStar(cur)), checkpointDir)
-          (n, n.count())
+    Lineage.keepingJobDescription(cur.sparkSession.sparkContext) {
+      while (!converged && iter < maxIter) {
+        cur.sparkSession.sparkContext.setJobDescription(s"cc-star round $iter")
+        // two-tier fixed-point probe, replacing the former two exceptAll
+        // passes (~4 wide shuffles per round): (1) COUNT — both sides are
+        // DISTINCT edge sets (symmetrize ends in .distinct()), so unequal
+        // cardinality proves change; r22: the count RIDES the
+        // materialization job via an Observation (guide §2.6 — the former
+        // per-round count() job over the cached partitions is gone; the
+        // reliable-checkpoint upgrade path keeps it, Observation needs the
+        // SQL-tracked localCheckpoint action); (2) only equal counts
+        // (typically just the final round) pay a single full-outer join,
+        // where set equality ⟺ no one-sided row (limit-1 probe).
+        val (next, nextCnt) = checkpointDir match {
+          case None =>
+            val obs = org.apache.spark.sql.Observation()
+            val n = Lineage.materialize(smallStar(largeStar(cur))
+              .observe(obs, count(lit(1)).as("n")))
+            (n, obs.get("n").asInstanceOf[Long])
+          case _ =>
+            val n = Lineage.materialize(smallStar(largeStar(cur)), checkpointDir)
+            (n, n.count())
+        }
+        converged = nextCnt == curCnt && next.withColumn("__n", lit(1))
+          .join(cur.withColumn("__c", lit(1)), Seq("u", "v"), "full_outer")
+          .filter(col("__n").isNull || col("__c").isNull)
+          .isEmpty
+        // the probe (the only consumer of the old round) has run — release
+        // the superseded edge set; O(log n) rounds must hold ONE round's
+        // edge-sized working set, not all of them
+        Lineage.release(cur)
+        cur = next
+        curCnt = nextCnt
+        iter += 1
       }
-      converged = nextCnt == curCnt && next.withColumn("__n", lit(1))
-        .join(cur.withColumn("__c", lit(1)), Seq("u", "v"), "full_outer")
-        .filter(col("__n").isNull || col("__c").isNull)
-        .isEmpty
-      // the probe (the only consumer of the old round) has run — release
-      // the superseded edge set; O(log n) rounds must hold ONE round's
-      // edge-sized working set, not all of them
-      Lineage.release(cur)
-      cur = next
-      curCnt = nextCnt
-      iter += 1
     }
-    cur.sparkSession.sparkContext.setJobDescription(null)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds")

@@ -236,123 +236,123 @@ object IncrementalDedup {
           .hashedDistinctShingles(col(textCol)))
     val sc = spark.sparkContext
     val wideDdl = shinglesDdl(hashedShingles) + ", __sigs array<bigint>"
-    sc.setJobDescription(s"incr-text b=$batchId: stage+append shingles")
-    batch.select(
-        col(idCol).cast("long").as("doc_id"),
-        shsCol.as("shs"),
-        Dedup.sigArray(col(textCol), k).as("__sigs"))
-      .select(col("doc_id"), col("shs"), size(col("shs")).as("nsh"),
-        col("__sigs"))
-      .write.mode("overwrite").parquet(s"$indexDir/$ShinglesT/batch=$batchId")
-    // read-back with the explicit wide schema: an empty batch may write a
-    // footerless partition, which schema inference would refuse
-    val wide = spark.read.schema(wideDdl)
-      .parquet(s"$indexDir/$ShinglesT/batch=$batchId")
-    val bandsB = wide
-      .select(col("doc_id"),
-        explode(Dedup.bandArrayOfSigs(col("__sigs"), k, bands)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    val shsB = wide.select(col("doc_id"), col("shs"), col("nsh"))
+    Lineage.keepingJobDescription(sc) {
+      sc.setJobDescription(s"incr-text b=$batchId: stage+append shingles")
+      batch.select(
+          col(idCol).cast("long").as("doc_id"),
+          shsCol.as("shs"),
+          Dedup.sigArray(col(textCol), k).as("__sigs"))
+        .select(col("doc_id"), col("shs"), size(col("shs")).as("nsh"),
+          col("__sigs"))
+        .write.mode("overwrite").parquet(s"$indexDir/$ShinglesT/batch=$batchId")
+      // read-back with the explicit wide schema: an empty batch may write a
+      // footerless partition, which schema inference would refuse
+      val wide = spark.read.schema(wideDdl)
+        .parquet(s"$indexDir/$ShinglesT/batch=$batchId")
+      val bandsB = wide
+        .select(col("doc_id"),
+          explode(Dedup.bandArrayOfSigs(col("__sigs"), k, bands)).as("bk"))
+        .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
+      val shsB = wide.select(col("doc_id"), col("shs"), col("nsh"))
 
-    // prior member count per touched bucket (semi-join-pruned, per-leg —
-    // zero-exchange on a promoted base): the offset that turns a
-    // batch-local rank into the row's FINAL rank in its bucket.
-    // left_semi ignores right-side duplicates, so the raw batch band keys
-    // serve as the prune set (r21's .distinct() here cost one whole
-    // exchange + AQE stage per batch for nothing); and on the PLAIN path
-    // (no promoted base) there is exactly one leg, so the per-leg count IS
-    // the prior count — the outer re-aggregation over the same keys was a
-    // second identity exchange.
-    val touched = bandsB.select("band", "band_key")
-    val legCnt = (s: DataFrame) =>
-      s.join(touched, Seq("band", "band_key"), "left_semi")
-        .groupBy("band", "band_key").agg(count(lit(1)).as("n_prior"))
-    val priorCnt = vBands.base match {
-      case Some(_) => vBands.over(s =>
-          legCnt(s).withColumnRenamed("n_prior", "n_leg"))
-        .groupBy("band", "band_key").agg(sum("n_leg").as("n_prior"))
-      case None => legCnt(vBands.delta.drop("batch"))
-    }
-
-    // bucket ranks are PREFIX-STABLE under id-ordered batches — computed
-    // once here, stored, and filtered at probe time ([[Dedup
-    // .repCandidatePairs]] semantics: partner must be one of the bucket's
-    // maxReps earliest members; dense buckets are PROCESSED, not skipped).
-    // r22: the ranks are written STRAIGHT to the bands partition (one job)
-    // and read back for the candidate joins below — the r21 shape
-    // checkpointed them first and re-read the checkpoint to append.
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "band_key").orderBy("doc_id")
-    sc.setJobDescription(s"incr-text b=$batchId: rank+append bands")
-    bandsB.join(priorCnt, Seq("band", "band_key"), "left")
-      .withColumn("rank",
-        (row_number().over(wB) + coalesce(col("n_prior"), lit(0L))).cast("long"))
-      .select(col("doc_id"), col("band"), col("band_key"), col("rank"))
-      .write.mode("overwrite").parquet(s"$indexDir/$BandsT/batch=$batchId")
-    // both appends are on disk — the batch COMMITS here; the kept
-    // computation below reads the just-written partitions back. Same
-    // crash contract as before: a crash between the two appends leaves an
-    // uncommitted half-write that every later read refuses until this
-    // batch id is replayed ([[BatchCommits]]); a crash during the kept
-    // computation leaves a committed batch whose kept frame the caller
-    // re-derives by replaying the same id (idempotent overwrite).
-    BatchCommits.mark(spark, indexDir, batchId)
-    val ranked = spark.read.schema(
-        "doc_id bigint, band int, band_key string, rank bigint")
-      .parquet(s"$indexDir/$BandsT/batch=$batchId")
-
-    // candidates: batch doc × representative. band_key leads the join
-    // keys: it is the base's bucket+sort column, so the bucketed leg
-    // needs neither Exchange nor Sort; the rank filter pushes to the scan.
-    val cross = vBands.over(s => ranked
-      .select(col("band"), col("band_key"), col("doc_id"))
-      .join(s.filter(col("rank") <= maxReps)
-        .select(col("band_key"), col("band"), col("doc_id").as("partner_id")),
-        Seq("band_key", "band"))
-      .select(col("partner_id"), col("doc_id")))
-    val intra = ranked.filter(col("rank") <= maxReps)
-      .select(col("band"), col("band_key"), col("doc_id").as("partner_id"))
-      .join(ranked.select(col("band"), col("band_key"), col("doc_id")),
-        Seq("band", "band_key"))
-      .filter(col("partner_id") < col("doc_id"))
-      .select(col("partner_id"), col("doc_id"))
-    // promoted path: candidates feed per-leg partner joins below —
-    // materialize so the legs are probed once, not re-derived per
-    // consumer (eager mode only: a lazy result must not read released
-    // blocks, the probe() discipline). Plain path: single partner join,
-    // no need to pay the checkpoint.
-    val cand0 = cross.union(intra).distinct()
-    sc.setJobDescription(s"incr-text b=$batchId: stage candidates")
-    val cand = if (eagerResult && vBands.base.isDefined)
-      Lineage.materialize(cand0) else cand0
-    try {
-      // exact verification — the same |A∪B| = |A|+|B|−|A∩B| arithmetic as
-      // the batch form, partner sets read from the index (earlier batches)
-      // or the batch's own staged sets
-      val shsSel = (s: DataFrame) => s.select(col("doc_id").as("partner_id"),
-        col("shs").as("sh_a"), col("nsh").as("n_a"))
-      val withPartner = vShs.base match {
-        case Some(_) => vShs.over(s => cand.join(shsSel(s), "partner_id"))
-          .unionByName(cand.join(shsSel(shsB), "partner_id"))
-        case None => cand.join(
-          shsSel(vShs.delta.drop("batch")).unionByName(shsSel(shsB)), "partner_id")
+      // prior member count per touched bucket (semi-join-pruned, per-leg —
+      // zero-exchange on a promoted base): the offset that turns a
+      // batch-local rank into the row's FINAL rank in its bucket.
+      // left_semi ignores right-side duplicates, so the raw batch band keys
+      // serve as the prune set (r21's .distinct() here cost one whole
+      // exchange + AQE stage per batch for nothing); and on the PLAIN path
+      // (no promoted base) there is exactly one leg, so the per-leg count IS
+      // the prior count — the outer re-aggregation over the same keys was a
+      // second identity exchange.
+      val touched = bandsB.select("band", "band_key")
+      val legCnt = (s: DataFrame) =>
+        s.join(touched, Seq("band", "band_key"), "left_semi")
+          .groupBy("band", "band_key").agg(count(lit(1)).as("n_prior"))
+      val priorCnt = vBands.base match {
+        case Some(_) => vBands.over(s =>
+            legCnt(s).withColumnRenamed("n_prior", "n_leg"))
+          .groupBy("band", "band_key").agg(sum("n_leg").as("n_prior"))
+        case None => legCnt(vBands.delta.drop("batch"))
       }
-      val uni = (col("n_a") + col("n_b") - col("inter")).cast("double")
-      val dropped = withPartner
-        .join(shsB.select(col("doc_id"), col("shs").as("sh_b"), col("nsh").as("n_b")),
-          "doc_id")
-        .select(col("doc_id"), col("n_a"), col("n_b"),
-          size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"))
-        .filter(when(uni > 0, col("inter").cast("double") / uni)
-          .otherwise(lit(0.0)) >= minJaccard)
-        .select(col("doc_id").as(idCol)).distinct()
 
-      val kept = batch.join(dropped, Seq(idCol), "left_anti")
-      sc.setJobDescription(s"incr-text b=$batchId: kept")
-      val out = if (eagerResult) Lineage.materialize(kept) else kept
-      sc.setJobDescription(null)
-      out
-    } finally Lineage.release(cand) // no-op unless the promoted eager path
+      // bucket ranks are PREFIX-STABLE under id-ordered batches — computed
+      // once here, stored, and filtered at probe time ([[Dedup
+      // .repCandidatePairs]] semantics: partner must be one of the bucket's
+      // maxReps earliest members; dense buckets are PROCESSED, not skipped).
+      // r22: the ranks are written STRAIGHT to the bands partition (one job)
+      // and read back for the candidate joins below — the r21 shape
+      // checkpointed them first and re-read the checkpoint to append.
+      val wB = org.apache.spark.sql.expressions.Window
+        .partitionBy("band", "band_key").orderBy("doc_id")
+      sc.setJobDescription(s"incr-text b=$batchId: rank+append bands")
+      bandsB.join(priorCnt, Seq("band", "band_key"), "left")
+        .withColumn("rank",
+          (row_number().over(wB) + coalesce(col("n_prior"), lit(0L))).cast("long"))
+        .select(col("doc_id"), col("band"), col("band_key"), col("rank"))
+        .write.mode("overwrite").parquet(s"$indexDir/$BandsT/batch=$batchId")
+      // both appends are on disk — the batch COMMITS here; the kept
+      // computation below reads the just-written partitions back. Same
+      // crash contract as before: a crash between the two appends leaves an
+      // uncommitted half-write that every later read refuses until this
+      // batch id is replayed ([[BatchCommits]]); a crash during the kept
+      // computation leaves a committed batch whose kept frame the caller
+      // re-derives by replaying the same id (idempotent overwrite).
+      BatchCommits.mark(spark, indexDir, batchId)
+      val ranked = spark.read.schema(
+          "doc_id bigint, band int, band_key string, rank bigint")
+        .parquet(s"$indexDir/$BandsT/batch=$batchId")
+
+      // candidates: batch doc × representative. band_key leads the join
+      // keys: it is the base's bucket+sort column, so the bucketed leg
+      // needs neither Exchange nor Sort; the rank filter pushes to the scan.
+      val cross = vBands.over(s => ranked
+        .select(col("band"), col("band_key"), col("doc_id"))
+        .join(s.filter(col("rank") <= maxReps)
+          .select(col("band_key"), col("band"), col("doc_id").as("partner_id")),
+          Seq("band_key", "band"))
+        .select(col("partner_id"), col("doc_id")))
+      val intra = ranked.filter(col("rank") <= maxReps)
+        .select(col("band"), col("band_key"), col("doc_id").as("partner_id"))
+        .join(ranked.select(col("band"), col("band_key"), col("doc_id")),
+          Seq("band", "band_key"))
+        .filter(col("partner_id") < col("doc_id"))
+        .select(col("partner_id"), col("doc_id"))
+      // promoted path: candidates feed per-leg partner joins below —
+      // materialize so the legs are probed once, not re-derived per
+      // consumer (eager mode only: a lazy result must not read released
+      // blocks, the probe() discipline). Plain path: single partner join,
+      // no need to pay the checkpoint.
+      val cand0 = cross.union(intra).distinct()
+      sc.setJobDescription(s"incr-text b=$batchId: stage candidates")
+      val cand = if (eagerResult && vBands.base.isDefined)
+        Lineage.materialize(cand0) else cand0
+      try {
+        // exact verification — the same |A∪B| = |A|+|B|−|A∩B| arithmetic as
+        // the batch form, partner sets read from the index (earlier batches)
+        // or the batch's own staged sets
+        val shsSel = (s: DataFrame) => s.select(col("doc_id").as("partner_id"),
+          col("shs").as("sh_a"), col("nsh").as("n_a"))
+        val withPartner = vShs.base match {
+          case Some(_) => vShs.over(s => cand.join(shsSel(s), "partner_id"))
+            .unionByName(cand.join(shsSel(shsB), "partner_id"))
+          case None => cand.join(
+            shsSel(vShs.delta.drop("batch")).unionByName(shsSel(shsB)), "partner_id")
+        }
+        val uni = (col("n_a") + col("n_b") - col("inter")).cast("double")
+        val dropped = withPartner
+          .join(shsB.select(col("doc_id"), col("shs").as("sh_b"), col("nsh").as("n_b")),
+            "doc_id")
+          .select(col("doc_id"), col("n_a"), col("n_b"),
+            size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"))
+          .filter(when(uni > 0, col("inter").cast("double") / uni)
+            .otherwise(lit(0.0)) >= minJaccard)
+          .select(col("doc_id").as(idCol)).distinct()
+
+        val kept = batch.join(dropped, Seq(idCol), "left_anti")
+        sc.setJobDescription(s"incr-text b=$batchId: kept")
+        if (eagerResult) Lineage.materialize(kept) else kept
+      } finally Lineage.release(cand) // no-op unless the promoted eager path
+    }
   }
 
   /** READ-ONLY probe: the rows of `batch` with NO near-duplicate among
@@ -1562,97 +1562,97 @@ object IncrementalEmbeddingDedup {
     val sc = spark.sparkContext
     val storedV =
       if (quantized) col("v").cast("array<tinyint>").as("v") else col("v")
-    sc.setJobDescription(s"incr-emb b=$batchId: stage+append vectors")
-    Similarity.bucketedBase(batchV, idCol, vcol, dim, planes)
-      .select(col(idCol).cast("long").as("id"), storedV,
-        col("n").as("nrm"), col("bucket"))
-      .write.mode("overwrite").parquet(s"$indexDir/$VectorsT/batch=$batchId")
-    // read-back with the explicit staged schema (an empty batch may write
-    // a footerless partition, which schema inference would refuse); codes
-    // cast back to doubles — same integer values
-    val baseB0 = spark.read.schema(vectorsDdl(quantized) + ", bucket bigint")
-      .parquet(s"$indexDir/$VectorsT/batch=$batchId")
-    val baseB =
-      if (!quantized) baseB0
-      else baseB0.withColumn("v", col("v").cast("array<double>"))
+    Lineage.keepingJobDescription(sc) {
+      sc.setJobDescription(s"incr-emb b=$batchId: stage+append vectors")
+      Similarity.bucketedBase(batchV, idCol, vcol, dim, planes)
+        .select(col(idCol).cast("long").as("id"), storedV,
+          col("n").as("nrm"), col("bucket"))
+        .write.mode("overwrite").parquet(s"$indexDir/$VectorsT/batch=$batchId")
+      // read-back with the explicit staged schema (an empty batch may write
+      // a footerless partition, which schema inference would refuse); codes
+      // cast back to doubles — same integer values
+      val baseB0 = spark.read.schema(vectorsDdl(quantized) + ", bucket bigint")
+        .parquet(s"$indexDir/$VectorsT/batch=$batchId")
+      val baseB =
+        if (!quantized) baseB0
+        else baseB0.withColumn("v", col("v").cast("array<double>"))
 
-    // prior member count per touched bucket (per-leg, zero-exchange on a
-    // promoted base) — the offset that turns a batch-local rank into the
-    // row's FINAL rank in its bucket. left_semi ignores right-side
-    // duplicates (no .distinct() exchange on the prune set), and the
-    // plain path has exactly one leg, so its per-leg count IS the prior
-    // count (the outer re-aggregation was an identity exchange).
-    val touched = baseB.select("bucket")
-    val legCnt = (s: DataFrame) =>
-      s.join(touched, Seq("bucket"), "left_semi")
-        .groupBy("bucket").agg(count(lit(1)).as("n_prior"))
-    val priorCnt = vBuckets.base match {
-      case Some(_) => vBuckets.over(s =>
-          legCnt(s).withColumnRenamed("n_prior", "n_leg"))
-        .groupBy("bucket").agg(sum("n_leg").as("n_prior"))
-      case None => legCnt(vBuckets.delta.drop("batch"))
+      // prior member count per touched bucket (per-leg, zero-exchange on a
+      // promoted base) — the offset that turns a batch-local rank into the
+      // row's FINAL rank in its bucket. left_semi ignores right-side
+      // duplicates (no .distinct() exchange on the prune set), and the
+      // plain path has exactly one leg, so its per-leg count IS the prior
+      // count (the outer re-aggregation was an identity exchange).
+      val touched = baseB.select("bucket")
+      val legCnt = (s: DataFrame) =>
+        s.join(touched, Seq("bucket"), "left_semi")
+          .groupBy("bucket").agg(count(lit(1)).as("n_prior"))
+      val priorCnt = vBuckets.base match {
+        case Some(_) => vBuckets.over(s =>
+            legCnt(s).withColumnRenamed("n_prior", "n_leg"))
+          .groupBy("bucket").agg(sum("n_leg").as("n_prior"))
+        case None => legCnt(vBuckets.delta.drop("batch"))
+      }
+
+      // bucket ranks are PREFIX-STABLE under id-ordered batches: the K
+      // earliest members of a bucket never change as higher ids arrive, so
+      // each row's rank is computed ONCE (batch window + prior offset) and
+      // written STRAIGHT to the buckets partition (r22: one job; the r21
+      // shape checkpointed the ranked frame first and re-read it to append)
+      val wB = org.apache.spark.sql.expressions.Window
+        .partitionBy("bucket").orderBy("id")
+      sc.setJobDescription(s"incr-emb b=$batchId: rank+append buckets")
+      baseB.join(priorCnt, Seq("bucket"), "left")
+        .withColumn("rank",
+          (row_number().over(wB) + coalesce(col("n_prior"), lit(0L))).cast("long"))
+        .select(col("id"), col("bucket"), col("rank"))
+        .write.mode("overwrite").parquet(s"$indexDir/$BucketsT/batch=$batchId")
+      // both appends are on disk — the batch COMMITS here (same crash
+      // contract as before: a half-write refuses loudly until replayed)
+      BatchCommits.mark(spark, indexDir, batchId)
+      val rankedB = spark.read.schema("id bigint, bucket bigint, rank bigint")
+        .parquet(s"$indexDir/$BucketsT/batch=$batchId")
+
+      // REPRESENTATIVE panel with vectors: index reps come from a pushed
+      // `rank <= maxReps` filter semi-pruned to touched buckets (≤ maxReps
+      // rows per touched bucket — never the raw bucket), their vectors
+      // fetched leg-aligned (a batch partition writes both tables, and
+      // promoteBase folds both at one boundary, so a rep's vector is always
+      // in the SAME leg); intra reps are the just-written batch partition
+      // read back through the SAME leg shape — the batch IS a leg now
+      def legRepVecs(b: DataFrame, v: DataFrame): DataFrame =
+        b.filter(col("rank") <= maxReps)
+          .join(touched, Seq("bucket"), "left_semi")
+          .select(col("bucket"), col("id"))
+          .join(v.select(col("id"), col("v"), col("nrm")), Seq("id"))
+          .select(col("bucket").as("bucket2"), col("id").as("neighbor_id"),
+            col("v").as("cv"), col("nrm").as("cn"))
+      val idxRepVecs = (vBuckets.base, vVecs.base) match {
+        case (Some(bb), Some(vb)) => legRepVecs(bb, vb).unionByName(
+          legRepVecs(vBuckets.delta.drop("batch"), vVecs.delta.drop("batch")))
+        case _ =>
+          legRepVecs(vBuckets.delta.drop("batch"), vVecs.delta.drop("batch"))
+      }
+      val repVecs = idxRepVecs.unionByName(legRepVecs(rankedB, baseB))
+
+      // the drop test is a LEFT SEMI with the cosine in the join condition —
+      // a duplicate short-circuits at its first matching representative
+      // (usually rep 1 of a dense cluster) instead of materializing the
+      // candidate pair set (the [[Similarity.dropEmbeddingNearDups]] shape;
+      // materializing pairs measured 3.3× slower at the 100× envelope).
+      // The probe side needs no rank — only the panel filters on it.
+      val dropped = baseB
+        .select(col("id"), col("v").as("qv"), col("nrm").as("qn"), col("bucket"))
+        .join(repVecs,
+          col("bucket") === col("bucket2") && col("neighbor_id") < col("id") &&
+            Text.floor6(Similarity.candCos) >= lit(minCos), "left_semi")
+        .select(col("id"))
+
+      val kept = batch.join(dropped.select(col("id").cast("long").as(idCol)),
+        Seq(idCol), "left_anti")
+      sc.setJobDescription(s"incr-emb b=$batchId: kept")
+      if (eagerResult) Lineage.materialize(kept) else kept
     }
-
-    // bucket ranks are PREFIX-STABLE under id-ordered batches: the K
-    // earliest members of a bucket never change as higher ids arrive, so
-    // each row's rank is computed ONCE (batch window + prior offset) and
-    // written STRAIGHT to the buckets partition (r22: one job; the r21
-    // shape checkpointed the ranked frame first and re-read it to append)
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy("bucket").orderBy("id")
-    sc.setJobDescription(s"incr-emb b=$batchId: rank+append buckets")
-    baseB.join(priorCnt, Seq("bucket"), "left")
-      .withColumn("rank",
-        (row_number().over(wB) + coalesce(col("n_prior"), lit(0L))).cast("long"))
-      .select(col("id"), col("bucket"), col("rank"))
-      .write.mode("overwrite").parquet(s"$indexDir/$BucketsT/batch=$batchId")
-    // both appends are on disk — the batch COMMITS here (same crash
-    // contract as before: a half-write refuses loudly until replayed)
-    BatchCommits.mark(spark, indexDir, batchId)
-    val rankedB = spark.read.schema("id bigint, bucket bigint, rank bigint")
-      .parquet(s"$indexDir/$BucketsT/batch=$batchId")
-
-    // REPRESENTATIVE panel with vectors: index reps come from a pushed
-    // `rank <= maxReps` filter semi-pruned to touched buckets (≤ maxReps
-    // rows per touched bucket — never the raw bucket), their vectors
-    // fetched leg-aligned (a batch partition writes both tables, and
-    // promoteBase folds both at one boundary, so a rep's vector is always
-    // in the SAME leg); intra reps are the just-written batch partition
-    // read back through the SAME leg shape — the batch IS a leg now
-    def legRepVecs(b: DataFrame, v: DataFrame): DataFrame =
-      b.filter(col("rank") <= maxReps)
-        .join(touched, Seq("bucket"), "left_semi")
-        .select(col("bucket"), col("id"))
-        .join(v.select(col("id"), col("v"), col("nrm")), Seq("id"))
-        .select(col("bucket").as("bucket2"), col("id").as("neighbor_id"),
-          col("v").as("cv"), col("nrm").as("cn"))
-    val idxRepVecs = (vBuckets.base, vVecs.base) match {
-      case (Some(bb), Some(vb)) => legRepVecs(bb, vb).unionByName(
-        legRepVecs(vBuckets.delta.drop("batch"), vVecs.delta.drop("batch")))
-      case _ =>
-        legRepVecs(vBuckets.delta.drop("batch"), vVecs.delta.drop("batch"))
-    }
-    val repVecs = idxRepVecs.unionByName(legRepVecs(rankedB, baseB))
-
-    // the drop test is a LEFT SEMI with the cosine in the join condition —
-    // a duplicate short-circuits at its first matching representative
-    // (usually rep 1 of a dense cluster) instead of materializing the
-    // candidate pair set (the [[Similarity.dropEmbeddingNearDups]] shape;
-    // materializing pairs measured 3.3× slower at the 100× envelope).
-    // The probe side needs no rank — only the panel filters on it.
-    val dropped = baseB
-      .select(col("id"), col("v").as("qv"), col("nrm").as("qn"), col("bucket"))
-      .join(repVecs,
-        col("bucket") === col("bucket2") && col("neighbor_id") < col("id") &&
-          Text.floor6(Similarity.candCos) >= lit(minCos), "left_semi")
-      .select(col("id"))
-
-    val kept = batch.join(dropped.select(col("id").cast("long").as(idCol)),
-      Seq(idCol), "left_anti")
-    sc.setJobDescription(s"incr-emb b=$batchId: kept")
-    val out = if (eagerResult) Lineage.materialize(kept) else kept
-    sc.setJobDescription(null)
-    out
   }
 
   /** [[addBatch]] with the plane count sized automatically: the FIRST

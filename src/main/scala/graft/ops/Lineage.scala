@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -66,5 +67,16 @@ object Lineage {
       case _ => ()
     }
     case _ => ()
+  }
+
+  /** Runs `body`, then restores the caller's job description — also when
+    * `body` throws. Multi-job ops label their own jobs for the listener
+    * and the UI; resetting to null on the way out would wipe the caller's
+    * label, and skipping the reset on a throw would leak the op's last
+    * label into the caller's next jobs.
+    */
+  def keepingJobDescription[A](sc: SparkContext)(body: => A): A = {
+    val caller = sc.getLocalProperty("spark.job.description")
+    try body finally sc.setJobDescription(caller)
   }
 }

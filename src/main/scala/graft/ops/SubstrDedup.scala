@@ -87,11 +87,11 @@ object SubstrDedup {
     * (self-repeats within one document count — a doc that repeats its own
     * boilerplate gets it cut too, matching the paper's any-repeat rule).
     *
-    * Deliberate tradeoff, measured (tools/SubstrProbe, sf0.1): a one-pass
-    * variant — `count() OVER (PARTITION BY gk)` then filter — is ~1.8×
-    * faster locally (3.2-4.0 s vs 5.8-7.3 s) because this formulation
-    * derives the windows table twice (once under the count aggregate, once
-    * as the semi-join probe). It is rejected anyway: WindowExec must SORT
+    * Deliberate tradeoff, measured at sf0.1 by a one-off r21 probe (since
+    * removed; these are its numbers): a one-pass variant — `count() OVER
+    * (PARTITION BY gk)` then filter — is ~1.8× faster locally (3.2-4.0 s
+    * vs 5.8-7.3 s) because this formulation derives the windows table
+    * twice (once under the count aggregate, once as the semi-join probe). It is rejected anyway: WindowExec must SORT
     * AND BUFFER each gram's whole partition, so one hot gram (a license
     * header occurring 10⁸ times in a web corpus) pins a reducer into a
     * multi-GB sort-spill. Here the hot key's count collapses map-side

@@ -62,28 +62,37 @@ object JdbcSink {
     val deleteSql = s"DELETE FROM $table WHERE ${keyCols.map(k => s"$k = ?").mkString(" AND ")}"
     val keyIdx = keyCols.map(k => schema.fieldIndex(k))
 
+    inTransactions(df, url) { (conn, rows) =>
+      val del = conn.prepareStatement(deleteSql)
+      val ins = conn.prepareStatement(insertSql)
+      rows.foreach { row =>
+        keyIdx.zipWithIndex.foreach { case (ki, pi) => bind(del, pi + 1, schema(ki).dataType, row, ki) }
+        del.addBatch()
+        cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
+        ins.addBatch()
+      }
+      Seq(del, ins)
+    }
+  }
+
+  /** One transaction per non-empty partition of `df`: `fill` prepares the
+    * statement batches for the partition's rows, they execute in the order
+    * returned, then one commit; any failure rolls the partition back.
+    */
+  private def inTransactions(df: DataFrame, url: String)(
+      fill: (Connection, Iterator[Row]) => Seq[PreparedStatement]): Unit =
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         val conn: Connection = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)
-          val del = conn.prepareStatement(deleteSql)
-          val ins = conn.prepareStatement(insertSql)
-          rows.foreach { row =>
-            keyIdx.zipWithIndex.foreach { case (ki, pi) => bind(del, pi + 1, schema(ki).dataType, row, ki) }
-            del.addBatch()
-            cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
-            ins.addBatch()
-          }
-          del.executeBatch()
-          ins.executeBatch()
+          fill(conn, rows).foreach(_.executeBatch())
           conn.commit()
         } catch {
           case e: Throwable => conn.rollback(); throw e
         } finally conn.close()
       }
     }
-  }
 
   private def bind(ps: PreparedStatement, pos: Int, dt: DataType, row: Row, idx: Int): Unit =
     if (row.isNullAt(idx)) ps.setObject(pos, null)
@@ -110,22 +119,13 @@ object JdbcSink {
     cols.foreach(graft.SqlIdent.column)
     val insertSql = s"INSERT INTO $table (${cols.mkString(", ")}) " +
       s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val conn: Connection = DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val ins = conn.prepareStatement(insertSql)
-          rows.foreach { row =>
-            cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
-            ins.addBatch()
-          }
-          ins.executeBatch()
-          conn.commit()
-        } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally conn.close()
+    inTransactions(df, url) { (conn, rows) =>
+      val ins = conn.prepareStatement(insertSql)
+      rows.foreach { row =>
+        cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
+        ins.addBatch()
       }
+      Seq(ins)
     }
   }
 

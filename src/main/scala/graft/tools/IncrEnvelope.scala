@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.ops.{IncrementalDedup, IncrementalEmbeddingDedup, Similarity}
 
 /** Scale-audit harness for the incremental-dedup maintenance pair: the
@@ -35,15 +34,7 @@ object IncrEnvelope {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "mode: emb | text | probe_curve | ...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
+    val spark = Session()
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

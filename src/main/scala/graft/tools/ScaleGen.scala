@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up corpus generator for the dedup/CC family audits: replicate
@@ -59,17 +59,10 @@ object ScaleGen {
     val factor = if (args.length > 2) args(2).toInt else 10
     val dupPct = if (args.length > 3) args(3).toInt else 5
     require(factor >= 1 && dupPct >= 0 && dupPct <= 100, s"bad factor=$factor dupPct=$dupPct")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // events.ts is TIMESTAMP(NANOS) — read as epoch-nanos long (the
-    // Tables contract); the passthrough copy keeps the same long values
-    graft.Tables.configure(spark)
+    // Tables contract, set by Session); the passthrough copy keeps the
+    // same long values
+    val spark = graft.Session()
 
     val idOffset = 1000000000L
     val copies = explode(sequence(lit(0), lit(factor - 1))).as("copy")
@@ -86,7 +79,7 @@ object ScaleGen {
     // (observed: a 36 s max-task / ~0 s median scan stage in
     // dedup_cc_kept's 100× audit). A real 100 TB corpus is many ~256 MB
     // files; 2×cores output files model that at this scale.
-    val outParts = cpus.toInt * 2
+    val outParts = spark.sparkContext.defaultParallelism * 2
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     docs.select(col("*"), copies)

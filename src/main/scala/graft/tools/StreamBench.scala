@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Text
 
@@ -13,10 +12,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val rate = sys.env.getOrElse("SPARK_GRAFT_RATE", "200000").toInt
     val seconds = sys.env.getOrElse("SPARK_GRAFT_SECONDS", "20").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val mode = sys.env.getOrElse("SPARK_GRAFT_STREAM_MODE", "wordcount")
     val src = spark.readStream.format("rate")

@@ -1,7 +1,11 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import graft.ops.Graph
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Connected-components semantics on hand graphs: transitive chains close,
   * disjoint components stay apart, self-loops/duplicate/reversed edges are
@@ -243,5 +247,18 @@ class GraphSpec extends SparkSpec {
     val c3 = Graph.kCore(edges, "a", "b", k = 3, rounds = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(c3 === Map(10L -> 3L, 11L -> 3L, 12L -> 3L, 13L -> 3L))
+  }
+
+  test("an eager localCheckpoint completes an Observation attached below it") {
+    // the fused convergence probes read their count from an Observation
+    // that rides the round's localCheckpoint job; if a Spark version stops
+    // running localCheckpoint as a SQL-tracked action, obs.get blocks
+    // forever, so the wait is bounded
+    val obs = Observation("cnt")
+    val ck = spark.range(1000).toDF("x").observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
+    val got = Await.result(Future(obs.get)(ExecutionContext.global), 10.seconds)
+    assert(got === Map("n" -> 1000L))
+    assert(ck.count() === 1000L)
   }
 }

@@ -78,11 +78,13 @@ class RetrievalSpec extends SparkSpec {
     // `term` — r22: usually gone entirely, the term table is collected to
     // a local table) and bm25's per-DOC length window (partitioned by the
     // doc id — doc-bounded groups, the keywords-style legitimate per-doc
-    // window). A window keyed on the query side sorting a score or rank
-    // column would mean a per-query rank stage regressed to the
+    // window, so its spec must START with doc_id: a window merely
+    // mentioning doc_id, e.g. sorting on it, could still be partitioned by
+    // the query side). A window keyed on the query side sorting a score or
+    // rank column would mean a per-query rank stage regressed to the
     // one-reducer-per-query shape.
     val wins = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(wins.forall(w => w.contains("term#") || w.contains("doc_id#")),
+    assert(wins.forall(w => w.contains("term#") || w.contains("windowspecdefinition(doc_id#")),
       s"non-term-picker, non-per-doc window in hybrid plan:\n${wins.mkString("\n")}")
   }
 }
