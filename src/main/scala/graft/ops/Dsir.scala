@@ -417,7 +417,7 @@ object Dsir {
     * two in-place overwrites would open exactly that window on a crash
     * between the writes; instead both are staged under one temp dir and
     * committed by a SINGLE directory rename (atomic on HDFS and posix —
-    * the `_graft_meta` rename-as-commit discipline, one level up):
+    * [[ModelStore]]'s rename-as-commit):
     *
     *   1. stage `_graft_staging_<nonce>/{lambda,meta}` — invisible;
     *   2. move any existing `current/` aside (to `_graft_prev_<nonce>`);
@@ -443,7 +443,7 @@ object Dsir {
     * LOUDLY (`ConcurrentModificationException`, its staging cleaned up)
     * instead of racing the rename sequence. The surviving publisher's
     * model is complete — the commit is still one rename. The unguarded
-    * residual is the tiny re-check→rename gap (the `SwapGen` caveat).
+    * residual is the tiny gap between the claim re-check and the rename.
     * Concurrent [[load]]s are safe: the commit-generation token is
     * bumped right before the commit renames and load retries on
     * movement.

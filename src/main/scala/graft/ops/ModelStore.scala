@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   *  - overwrite itself is delete-then-write, so a crash MID-write leaves
   *    a partial table a later read serves as silently wrong scores.
   *
-  * The protocol (identical to the index family's `_graft_meta` /
-  * `SwapGen` discipline, one level up):
+  * The protocol (a rename-as-commit with a claim token and a
+  * commit-generation token):
   *
   *  1. claim the publish (`_graft_pubclaim` := nonce) FIRST, and only
   *     then heal staging debris of crashed publishes — a LIVE competitor
@@ -202,7 +202,7 @@ object ModelStore {
     * type-based because Spark wraps the FileNotFound in AnalysisException
     * ("Path does not exist") at read-planning time.
     *
-    * The missing-file shapes are AMBIGUOUS (the ProbeRetry lesson, r20):
+    * The missing-file shapes are AMBIGUOUS (r20):
     * a STABLE corrupt model — a table missing inside a committed
     * `current/` — produces the same FileNotFound, and retrying it only
     * delays the loud refusal. [[read]] disambiguates with a live check:

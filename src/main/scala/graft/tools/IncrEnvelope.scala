@@ -21,14 +21,15 @@ import graft.ops.{IncrementalDedup, IncrementalEmbeddingDedup, Similarity}
   *    at a fixed batch size as the index grows 1×→10×→100×, plain vs
   *    promoted (the crossover SCALE.md names).
   *
-  *  - `rebucket_serving` / `compact_serving` / `promote_serving`:
-  *    availability DURING maintenance — a prober thread loops the
-  *    (internally-retrying) probe while the maintenance op runs,
-  *    classifying every outcome; client_failures and wrong must be 0.
+  *  - `rebucket_serving` / `compact_serving` / `promote_serving` (and the
+  *    `emb_` compact/promote twins): availability DURING maintenance — a
+  *    prober thread loops the probe while the maintenance op runs;
+  *    client_failures and wrong must be 0.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.IncrEnvelope
   *   <emb|embq8|rebucket|rebucket_promoted|text|probe_curve|
-  *    probe_curve_writer|rebucket_serving|compact_serving|promote_serving>
+  *    probe_curve_writer|rebucket_serving|compact_serving|promote_serving|
+  *    emb_compact_serving|emb_promote_serving>
   */
 object IncrEnvelope {
   def main(args: Array[String]): Unit = {
@@ -40,6 +41,46 @@ object IncrEnvelope {
       val t0 = System.nanoTime()
       val a = f
       (a, (System.nanoTime() - t0) / 1e9)
+    }
+    // hygiene: drop ONLY one index's promoted tables — the prefix is
+    // per-index-dir, so a shared session's other indexes survive
+    def dropTables(idx: String): Unit =
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith(graft.ops.IndexBase.tablePrefix(idx)))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    /** Availability DURING maintenance: a prober thread loops `probeKept`
+      * while `maintenance` runs. Every probe must return the quiet answer
+      * (else `wrong`, and the loop stops) and none may throw (else a
+      * client failure) — except `cutover`, an expected refusal once the
+      * maintenance changed what the probe presents, which ends the loop.
+      */
+    case class Serving(expect: Long, served: Int, failures: Int, wrong: Int,
+        seconds: Double) {
+      def json: String = s""""served":$served,"client_failures":$failures,""" +
+        s""""wrong":$wrong"""
+    }
+    def serving(probeKept: () => Long, cutover: Throwable => Boolean = _ => false)
+        (maintenance: => Unit): Serving = {
+      val expect = probeKept() // converge the plan before measuring
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val served = new java.util.concurrent.atomic.AtomicInteger(0)
+      val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+      val wrong = new java.util.concurrent.atomic.AtomicInteger(0)
+      val prober = new Thread(() => while (!stop.get()) {
+        try {
+          if (probeKept() == expect) served.incrementAndGet()
+          else { wrong.incrementAndGet(); stop.set(true) }
+        } catch {
+          case t: Throwable if cutover(t) => stop.set(true)
+          case t: Throwable =>
+            System.err.println(s"[serving] client failure: $t")
+            failures.incrementAndGet()
+        }
+      }, "serving-prober")
+      prober.start()
+      val (_, t) = timed(maintenance)
+      stop.set(true); prober.join()
+      Serving(expect, served.get(), failures.get(), wrong.get(), t)
     }
     def fresh(tag: String): String = {
       val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
@@ -132,13 +173,7 @@ object IncrEnvelope {
           s""""probe_sec":${f"$tProbe%.2f"},"probe_kept":$kProbe,""" +
           s""""hot_buckets":${st.getAs[Long]("hot_buckets")},""" +
           s""""max_bucket":${st.getAs[Long]("max_bucket")}}""")
-        // hygiene: drop ONLY this run's promoted tables — the prefix is
-        // per-index-dir, so other live indexes' catalog entries (whose
-        // meta still references them) survive a shared session
-        if (promoted)
-          spark.catalog.listTables().collect().map(_.name)
-            .filter(_.startsWith(graft.ops.IndexBase.tablePrefix(idx)))
-            .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        if (promoted) dropTables(idx)
 
       case "probe_curve" =>
         // serving-latency curve for the decontamination gate: probe
@@ -185,7 +220,7 @@ object IncrEnvelope {
           def probeOnce(idx: String): Double = {
             val (out, t) = timed(
               IncrementalDedup.probe(spark, idx, docs, "text", "doc_id"))
-            graft.ops.Lineage.release(out) // probe returns materialized (r19)
+            graft.ops.Lineage.release(out) // probe returns materialized
             t
           }
           val plainT = (1 to 3).map(_ => probeOnce(plain))
@@ -197,19 +232,14 @@ object IncrEnvelope {
         }
         println(s"""{"mode":"probe_curve","batch_docs":${docs.count()},""" +
           s""""points":[${pts.mkString(",")}]}""")
-        spark.catalog.listTables().collect().map(_.name)
-          .filter(_.startsWith(graft.ops.IndexBase.tablePrefix(promo)))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        dropTables(promo)
 
       case "rebucket_serving" =>
-        // r18: availability DURING a parameter migration — the staged
-        // rebucket's whole claim is that probes keep serving through the
-        // O(index) data phase and go dark only for the sub-second
-        // metadata swap. Measure it directly: a prober thread loops
-        // probe() against the index while rebucket(8→11) runs, recording
-        // each attempt's outcome; report the migration wall-time vs the
-        // observed refusal window (first-refused → last-refused span) and
-        // any probe that FAILED for a non-protocol reason (must be 0).
+        // availability DURING a parameter migration: probes pin a log
+        // version, so they should keep serving the pre-migration state
+        // through the whole O(index) data phase and refuse nothing at the
+        // commit. Measured directly: a prober thread loops probe() while
+        // rebucket(8→11) runs.
         val e = Tables.load(spark, sfDir, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val m = e.agg(max("vec_id")).head.getLong(0)
@@ -226,90 +256,25 @@ object IncrEnvelope {
           val out = IncrementalEmbeddingDedup.probe(spark, idx, gate,
             "embedding", "vec_id", dim = 64, planes = planes, minCos = 0.3)
           val n = out.count()
-          graft.ops.Lineage.release(out) // probe returns materialized (r19)
+          graft.ops.Lineage.release(out) // probe returns materialized
           n
         }
-        // converge the probe plan before measuring
-        val expect = probeKept(8)
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val served = new java.util.concurrent.atomic.AtomicInteger(0)
-        val refused = new java.util.concurrent.atomic.AtomicInteger(0)
-        val loudFnf = new java.util.concurrent.atomic.AtomicInteger(0)
-        val wrong = new java.util.concurrent.atomic.AtomicInteger(0)
-        val firstRefuse = new java.util.concurrent.atomic.AtomicLong(-1L)
-        val lastRefuse = new java.util.concurrent.atomic.AtomicLong(-1L)
-        val t0 = System.nanoTime()
-        def isFnf(t: Throwable): Boolean =
-          Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12).exists { c =>
-            c.isInstanceOf[java.io.FileNotFoundException] ||
-              Option(c.getMessage).exists(m =>
-                m.contains("FileNotFound") || m.contains("does not exist"))
-          }
-        val absorbed0 = graft.ops.ProbeRetry.absorbed
-        val prober = new Thread(() => {
-          while (!stop.get()) {
-            try {
-              val n = probeKept(8)
-              if (n == expect) served.incrementAndGet()
-              else { wrong.incrementAndGet(); stop.set(true) }
-            } catch {
-              // r19: probe() retries swap transients INTERNALLY, so any
-              // refusal reaching this catch means the bounded budget was
-              // exhausted — a genuinely client-visible failure (target 0)
-              case ex: IllegalArgumentException
-                  if ex.getMessage.contains("mid-SWAP") ||
-                    ex.getMessage.contains("migration") ||
-                    ex.getMessage.contains("raced this probe") =>
-                val t = System.nanoTime() - t0
-                firstRefuse.compareAndSet(-1L, t)
-                lastRefuse.set(t)
-                refused.incrementAndGet()
-              case ex: IllegalArgumentException
-                  // the swap replaces the stored planes: once meta flips,
-                  // an 8-plane probe refuses on the parameter pin — that
-                  // IS the cutover, not an availability failure
-                  if ex.getMessage.contains("planes") =>
-                stop.set(true)
-              // LOUD execution-time failure: the probe's frozen listing
-              // outlived the swap and a deleted file failed the read —
-              // retryable, never a wrong answer (the serve-through
-              // contract's documented residual)
-              case ex: Throwable if isFnf(ex) => loudFnf.incrementAndGet()
-              case ex: Throwable =>
-                System.err.println(s"[rebucket_serving] UNEXPECTED: $ex")
-                wrong.incrementAndGet(); stop.set(true)
-            }
-          }
-        }, "rebucket-prober")
-        prober.start()
-        val (_, tMig) = timed {
-          IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 11)
-        }
-        stop.set(true); prober.join()
-        val windowSec =
-          if (firstRefuse.get() < 0) 0.0
-          else (lastRefuse.get() - firstRefuse.get()) / 1e9
-        val post = probeKept(11)
+        // the commit replaces the stored planes: from then on an 8-plane
+        // probe refuses on the parameter pin — that IS the cutover, not
+        // an availability failure
+        val r = serving(() => probeKept(8), {
+          case ex: IllegalArgumentException => ex.getMessage.contains("planes")
+          case _ => false
+        })(IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 11))
         println(s"""{"mode":"rebucket_serving","vectors":${e.count()},""" +
-          s""""migrate_sec":${f"$tMig%.2f"},"served":${served.get()},""" +
-          s""""refused":${refused.get()},""" +
-          s""""refusal_window_sec":${f"$windowSec%.2f"},""" +
-          s""""loud_fnf":${loudFnf.get()},""" +
-          s""""client_failures":${refused.get() + loudFnf.get()},""" +
-          s""""absorbed_retries":${graft.ops.ProbeRetry.absorbed - absorbed0},""" +
-          s""""wrong":${wrong.get()},"post_migration_kept":$post}""")
+          s""""migrate_sec":${f"${r.seconds}%.2f"},${r.json},""" +
+          s""""post_migration_kept":${probeKept(11)}}""")
 
       case mode @ ("compact_serving" | "promote_serving") =>
-        // r19: the TEXT twin of rebucket_serving — measured availability
-        // during the two folding maintenance ops. A prober thread loops
-        // the (internally-retrying) probe against the index while
-        // compactIndex / promoteBase runs, classifying every outcome;
-        // with the r19 in-probe retry the target is CLIENT failures = 0
-        // and wrong = 0 (a wrong answer here would be the missing-folded-
-        // rows race the compact marker/bump reorder closed). The gate
-        // re-sends indexed content, so any silently-missing index rows
-        // surface as kept > expect — an under-drop is detectable, not
-        // invisible.
+        // the TEXT twin of rebucket_serving — measured availability during
+        // the two folding maintenance ops. The gate re-sends indexed
+        // content, so any silently-missing index rows surface as
+        // kept > expect — an under-drop is detectable, not invisible.
         val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
         val m = docs.agg(max("doc_id")).head.getLong(0)
         val idx = fresh(mode)
@@ -327,56 +292,17 @@ object IncrEnvelope {
           graft.ops.Lineage.release(out)
           n
         }
-        val expect = probeKept() // converge the plan before measuring
-        val absorbed0 = graft.ops.ProbeRetry.absorbed
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val served = new java.util.concurrent.atomic.AtomicInteger(0)
-        val refused = new java.util.concurrent.atomic.AtomicInteger(0)
-        val loudFnf = new java.util.concurrent.atomic.AtomicInteger(0)
-        val wrong = new java.util.concurrent.atomic.AtomicInteger(0)
-        def isFnfT(t: Throwable): Boolean =
-          Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12).exists { c =>
-            c.isInstanceOf[java.io.FileNotFoundException] ||
-              Option(c.getMessage).exists(m =>
-                m.contains("FileNotFound") || m.contains("does not exist"))
-          }
-        val prober = new Thread(() => {
-          while (!stop.get()) {
-            try {
-              val n = probeKept()
-              if (n == expect) served.incrementAndGet()
-              else { wrong.incrementAndGet(); stop.set(true) }
-            } catch {
-              case ex: IllegalArgumentException
-                  if ex.getMessage.contains("raced this probe") =>
-                refused.incrementAndGet()
-              case ex: Throwable if isFnfT(ex) => loudFnf.incrementAndGet()
-              case ex: Throwable =>
-                System.err.println(s"[$mode] UNEXPECTED: $ex")
-                wrong.incrementAndGet(); stop.set(true)
-            }
-          }
-        }, s"$mode-prober")
-        prober.start()
-        val (_, tMaint) = timed {
+        val r = serving(() => probeKept()) {
           if (mode == "compact_serving")
             IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 3)
           else
             IncrementalDedup.promoteBase(spark, idx, uptoExclusive = 3)
         }
-        stop.set(true); prober.join()
         val post = probeKept()
         println(s"""{"mode":"$mode","docs":${docs.count()},""" +
-          s""""maintenance_sec":${f"$tMaint%.2f"},"served":${served.get()},""" +
-          s""""refused":${refused.get()},"loud_fnf":${loudFnf.get()},""" +
-          s""""client_failures":${refused.get() + loudFnf.get()},""" +
-          s""""absorbed_retries":${graft.ops.ProbeRetry.absorbed - absorbed0},""" +
-          s""""wrong":${wrong.get()},""" +
-          s""""post_kept":$post,"post_equal":${post == expect}}""")
-        if (mode == "promote_serving")
-          spark.catalog.listTables().collect().map(_.name)
-            .filter(_.startsWith(graft.ops.IndexBase.tablePrefix(idx)))
-            .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+          s""""maintenance_sec":${f"${r.seconds}%.2f"},${r.json},""" +
+          s""""post_kept":$post,"post_equal":${post == r.expect}}""")
+        if (mode == "promote_serving") dropTables(idx)
 
       case mode @ ("emb_compact_serving" | "emb_promote_serving") =>
         // the EMBEDDING twin of compact_serving / promote_serving —
@@ -402,57 +328,17 @@ object IncrEnvelope {
           graft.ops.Lineage.release(out)
           n
         }
-        val expect = probeKept()
-        val absorbed0 = graft.ops.ProbeRetry.absorbed
-        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val served = new java.util.concurrent.atomic.AtomicInteger(0)
-        val refused = new java.util.concurrent.atomic.AtomicInteger(0)
-        val loudFnf = new java.util.concurrent.atomic.AtomicInteger(0)
-        val wrong = new java.util.concurrent.atomic.AtomicInteger(0)
-        def isFnfE(t: Throwable): Boolean =
-          Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12).exists { c =>
-            c.isInstanceOf[java.io.FileNotFoundException] ||
-              Option(c.getMessage).exists(m =>
-                m.contains("FileNotFound") || m.contains("does not exist"))
-          }
-        val prober = new Thread(() => {
-          while (!stop.get()) {
-            try {
-              val n = probeKept()
-              if (n == expect) served.incrementAndGet()
-              else { wrong.incrementAndGet(); stop.set(true) }
-            } catch {
-              case ex: IllegalArgumentException
-                  if ex.getMessage.contains("raced this probe") ||
-                    ex.getMessage.contains("mid-SWAP") =>
-                refused.incrementAndGet()
-              case ex: Throwable if isFnfE(ex) => loudFnf.incrementAndGet()
-              case ex: Throwable =>
-                System.err.println(s"[$mode] UNEXPECTED: $ex")
-                wrong.incrementAndGet(); stop.set(true)
-            }
-          }
-        }, s"$mode-prober")
-        prober.start()
-        val (_, tMaint) = timed {
+        val r = serving(() => probeKept()) {
           if (mode == "emb_compact_serving")
             IncrementalEmbeddingDedup.compactIndex(spark, idx, uptoExclusive = 3)
           else
             IncrementalEmbeddingDedup.promoteBase(spark, idx, uptoExclusive = 3)
         }
-        stop.set(true); prober.join()
         val post = probeKept()
         println(s"""{"mode":"$mode","vectors":${e.count()},""" +
-          s""""maintenance_sec":${f"$tMaint%.2f"},"served":${served.get()},""" +
-          s""""refused":${refused.get()},"loud_fnf":${loudFnf.get()},""" +
-          s""""client_failures":${refused.get() + loudFnf.get()},""" +
-          s""""absorbed_retries":${graft.ops.ProbeRetry.absorbed - absorbed0},""" +
-          s""""wrong":${wrong.get()},""" +
-          s""""post_kept":$post,"post_equal":${post == expect}}""")
-        if (mode == "emb_promote_serving")
-          spark.catalog.listTables().collect().map(_.name)
-            .filter(_.startsWith(graft.ops.IndexBase.tablePrefix(idx)))
-            .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+          s""""maintenance_sec":${f"${r.seconds}%.2f"},${r.json},""" +
+          s""""post_kept":$post,"post_equal":${post == r.expect}}""")
+        if (mode == "emb_promote_serving") dropTables(idx)
 
       case "probe_curve_writer" =>
         // r18: the serving-latency curve under CONCURRENT WRITER LOAD —
@@ -490,7 +376,7 @@ object IncrEnvelope {
           def probeOnce(): Double = {
             val (out, t) = timed(
               IncrementalDedup.probe(spark, idx, docs, "text", "doc_id"))
-            graft.ops.Lineage.release(out) // probe returns materialized (r19)
+            graft.ops.Lineage.release(out) // probe returns materialized
             t
           }
           val quietT = (1 to 3).map(_ => probeOnce())
@@ -567,11 +453,7 @@ object IncrEnvelope {
           s""""batch01_promo_sec":${f"$tB01%.2f"},""" +
           s""""hot_buckets":${st.getAs[Long]("hot_buckets")},""" +
           s""""max_bucket":${st.getAs[Long]("max_bucket")}}""")
-        // hygiene: drop ONLY this run's promoted tables (prefix is
-        // per-index-dir — a shared session's other indexes survive)
-        spark.catalog.listTables().collect().map(_.name)
-          .filter(_.startsWith(graft.ops.IndexBase.tablePrefix(promo)))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        dropTables(promo)
 
       case other => sys.error(s"unknown mode $other — use emb | text | probe_curve")
     }

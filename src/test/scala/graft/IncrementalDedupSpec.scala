@@ -31,6 +31,54 @@ class IncrementalDedupSpec extends SparkSpec {
   private val B = "one two three four five six seven eight nine"
   private val C = "red orange yellow green blue indigo violet shade"
 
+  private def fsOf(idx: String) = new org.apache.hadoop.fs.Path(idx)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def latest(idx: String) = graft.ops.IndexLog.latest(spark, idx).get
+
+  /** Forge "the newest commit never happened" — a crash after the data
+    * writes, before the commit: the newest log version goes, its data
+    * stays on disk unlisted.
+    */
+  private def dropNewestVersion(idx: String): Unit = {
+    val log = new java.io.File(s"$idx/_graft_log")
+    val newest = log.listFiles().flatMap(_.getName.toLongOption).max
+    assert(new java.io.File(log, newest.toString).delete())
+  }
+
+  /** The listed data dirs of one table in the latest version. */
+  private def listedDirs(idx: String, table: String): Map[Int, Seq[String]] =
+    latest(idx).batches(table)
+
+  /** Batch dirs physically present under one table root. */
+  private def batchDirsOnDisk(idx: String, table: String): Seq[String] =
+    new java.io.File(s"$idx/$table").listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted.toSeq
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
+  /** Forge an index written before the manifest log from a log index:
+    * each listed batch's files move up into their `batch=N` dir, the
+    * parameters (and promoted base tables) go to `_graft_meta`, and the
+    * log is removed.
+    */
+  private def toPreLogLayout(idx: String): Unit = {
+    val snap = latest(idx)
+    for ((t, bs) <- snap.parts; (b, ps) <- bs) {
+      val dst = new java.io.File(s"$idx/$t/batch=$b")
+      ps.map(p => new java.io.File(s"$idx/$p")).foreach(_.listFiles()
+        .foreach(f => java.nio.file.Files.move(f.toPath, dst.toPath.resolve(f.getName))))
+      dst.listFiles().filter(_.isDirectory).foreach(deleteTree)
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$idx/_graft_meta"),
+      (snap.meta ++ snap.bases.map { case (t, (name, _)) => s"${t}_table" -> name })
+        .map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes("UTF-8"))
+    deleteTree(new java.io.File(s"$idx/_graft_log"))
+  }
+
   test("id-ordered incremental batches equal the one-pass batch policy on the real corpus") {
     val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
     val m = docs.agg(max("doc_id")).head.getLong(0)
@@ -151,15 +199,18 @@ class IncrementalDedupSpec extends SparkSpec {
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(3, A), doc(4, C))),
       "text", "doc_id", 1)
     IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 2)
-    val dirs = new java.io.File(s"$idx/bands").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq === Seq("batch=-1"), s"expected one base partition, got $dirs")
+    assert(listedDirs(idx, "bands").keySet === Set(-1) &&
+      listedDirs(idx, "shingles").keySet === Set(-1),
+      s"expected one listed base partition, got ${latest(idx)}")
     // post-compaction batch answers exactly as it would have uncompacted:
     // doc 5 dups A (seen in batches 0 AND 1), doc 6 dups C, doc 7 fresh
     val k2 = IncrementalDedup.addBatch(spark, idx,
       df(Seq(doc(5, A), doc(6, C), doc(7, B + " extra tail words here"))),
       "text", "doc_id", 2)
     assert(k2.select("doc_id").as[Long].collect().sorted === Array(7L))
+    // deletion waited one version: the folded partitions went with the
+    // commit after the compaction's
+    assert(batchDirsOnDisk(idx, "bands") === Seq("batch=-1", "batch=2"))
     // compaction is re-runnable (folds the previous base + new batches)
     IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 3)
     val k3 = IncrementalDedup.addBatch(spark, idx, df(Seq(doc(8, C))),
@@ -173,11 +224,9 @@ class IncrementalDedupSpec extends SparkSpec {
     val rows = (1L to 400L).map(i => doc(i, s"token$i " + A + s" tail$i"))
     IncrementalDedup.addBatch(spark, idx, df(rows.take(200)), "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(rows.drop(200)), "text", "doc_id", 1)
-    def parquetFiles(table: String) = {
-      val d = new java.io.File(s"$idx/$table/batch=-1")
-      if (!d.exists()) 0
-      else d.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))
-    }
+    def parquetFiles(table: String) =
+      listedDirs(idx, table).getOrElse(-1, Nil).map(p => new java.io.File(s"$idx/$p"))
+        .map(_.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))).sum
     val inputBytes = {
       def sz(f: java.io.File): Long =
         if (f.isFile) f.length() else f.listFiles().map(sz).sum
@@ -202,43 +251,31 @@ class IncrementalDedupSpec extends SparkSpec {
       "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(3, C))),
       "text", "doc_id", 1)
-    // forge the crash window by hand for BOTH index tables: staged base
-    // complete, commit marker written, one folded partition already
-    // deleted, publish rename never ran
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for ((table, ddl) <- Seq(
-        "bands" -> "doc_id bigint, band int, band_key string, rank bigint",
-        "shingles" -> "doc_id bigint, shs array<string>, nsh int")) {
-      val root = s"$idx/$table"
-      spark.read.schema(s"$ddl, batch int").parquet(root)
-        .filter(col("batch") < 2).drop("batch")
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"${root}__compact_staging")
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"${root}__compact_commit"), true)
-      try out.write("2".getBytes("UTF-8")) finally out.close()
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/batch=0"), true)
-    }
-    // the next batch's index read must heal first — the half-deleted index
-    // would otherwise silently forget docs 1 and 2 (under-dropping dups)
+    // forge a compaction that crashed after writing its base for BOTH
+    // tables but before its commit: the base is on disk, unlisted
+    IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 2)
+    dropNewestVersion(idx)
+    assert(listedDirs(idx, "bands").keySet === Set(0, 1))
+    // the next batch reads the committed version — the folded partitions
+    // are all still there (deletion waits one version), so docs 1 and 2
+    // are not forgotten, and the unlisted base is never double-read
     val k2 = IncrementalDedup.addBatch(spark, idx,
       df(Seq(doc(10, A), doc(11, B + " and a genuinely new tail"))),
       "text", "doc_id", 2)
     assert(k2.select("doc_id").as[Long].collect().sorted === Array(11L),
-      "doc 10 duplicates indexed doc 1 and must drop after healing")
-    val dirs = new java.io.File(s"$idx/bands").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq === Seq("batch=-1", "batch=2"), s"healed layout: ${dirs.toSeq}")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands__compact_commit")),
-      "marker must be consumed by the heal")
-    // marker WITHOUT staging (crash after the publish rename): heal is a
-    // pure marker cleanup, the index keeps answering
-    val out2 = fs.create(new org.apache.hadoop.fs.Path(s"$idx/bands__compact_commit"), true)
-    try out2.write("3".getBytes("UTF-8")) finally out2.close()
+      "doc 10 duplicates indexed doc 1 and must drop")
+    // rerunning the compaction commits it; the crashed attempt's
+    // never-listed base goes with that commit
+    IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 3)
+    assert(listedDirs(idx, "bands").keySet === Set(-1))
+    assert(new java.io.File(s"$idx/bands/batch=-1").listFiles()
+      .count(_.isDirectory) === 1, "the crashed base must be collected")
+    // crash after the commit, before collection: the index keeps
+    // answering, and the next commit collects the folded partitions
     val k3 = IncrementalDedup.addBatch(spark, idx, df(Seq(doc(20, C))),
       "text", "doc_id", 3)
     assert(k3.isEmpty, "doc 20 duplicates indexed doc 3")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands__compact_commit")))
+    assert(batchDirsOnDisk(idx, "bands") === Seq("batch=-1", "batch=3"))
   }
 
   test("EMBEDDING twin: id-ordered incremental batches equal the one-pass batch policy") {
@@ -610,26 +647,72 @@ class IncrementalDedupSpec extends SparkSpec {
     assert((k1f ++ k2f).sorted === batchKept)
   }
 
-  test("an in-flight rebucket marker blocks probes until the migration reruns") {
+  test("a rebucket that crashed before its commit leaves the index serving the " +
+      "old planes until it reruns") {
     val e = Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding")).limit(50)
     val idx = freshIndex("rebucket_crash")
-    import graft.ops.{IncrementalEmbeddingDedup, IndexMeta}
+    import graft.ops.IncrementalEmbeddingDedup
     IncrementalEmbeddingDedup.addBatch(spark, idx, e, "embedding", "vec_id",
       batchId = 0, dim = 64, planes = 8, minCos = 0.3)
-    // simulate a crashed migration: marker set, buckets possibly mixed
-    IndexMeta.setMigrating(spark, idx)
-    val ex = intercept[IllegalArgumentException] {
+    // forge a migration that crashed after its data phase: new-plane
+    // buckets on disk, unlisted; the index is still at 8 planes
+    IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
+    dropNewestVersion(idx)
+    assert(latest(idx).meta("planes") === "8")
+    // no half-migrated state is ever served: a 9-plane writer refuses on
+    // the pin, an 8-plane one appends against the old buckets
+    intercept[IllegalArgumentException] {
       IncrementalEmbeddingDedup.addBatch(spark, idx, e, "embedding", "vec_id",
-        batchId = 1, dim = 64, planes = 8, minCos = 0.3)
+        batchId = 1, dim = 64, planes = 9, minCos = 0.3)
     }
-    assert(ex.getMessage.contains("unfinished parameter migration"))
-    // rerunning the migration to completion clears the marker
+    val k1 = IncrementalEmbeddingDedup.addBatch(spark, idx,
+      e.withColumn("vec_id", col("vec_id") + 1000000L), "embedding",
+      "vec_id", batchId = 1, dim = 64, planes = 8, minCos = 0.3)
+    assert(k1.isEmpty, "batch 1 re-sends batch 0's vectors under fresh ids — all dups")
+    // rerunning the migration completes it, batch 1 included
     IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
     val k = IncrementalEmbeddingDedup.addBatch(spark, idx,
-      e.withColumn("vec_id", col("vec_id") + 1000000L), "embedding",
-      "vec_id", batchId = 1, dim = 64, planes = 9, minCos = 0.3)
-    assert(k.isEmpty, "batch 1 re-sends batch 0's vectors under fresh ids — all dups")
+      e.withColumn("vec_id", col("vec_id") + 2000000L), "embedding",
+      "vec_id", batchId = 2, dim = 64, planes = 9, minCos = 0.3)
+    assert(k.isEmpty, "batch 2 re-sends batch 0's vectors under fresh ids — all dups")
+  }
+
+  test("probes keep answering through a LIVE rebucket — zero client-visible " +
+      "failures, the cutover is the parameter pin") {
+    val e = Tables.load(spark, sf(), "embeddings")
+      .select(col("vec_id"), col("embedding")).limit(60)
+    val idx = freshIndex("rebucketlive")
+    import graft.ops.IncrementalEmbeddingDedup
+    IncrementalEmbeddingDedup.addBatch(spark, idx, e, "embedding", "vec_id",
+      batchId = 0, dim = 64, planes = 8, minCos = 0.3)
+    val gate = e.withColumn("vec_id", col("vec_id") + 1000000L)
+    def answer(planes: Int) = IncrementalEmbeddingDedup.probe(spark, idx, gate,
+      "embedding", "vec_id", dim = 64, planes = planes, minCos = 0.3)
+      .select("vec_id").as[Long].collect().toSeq
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val wrong = new java.util.concurrent.atomic.AtomicInteger(0)
+    val outcomes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val prober = new Thread(() => {
+      while (!stop.get()) {
+        try {
+          if (answer(8).isEmpty) outcomes.incrementAndGet() else wrong.incrementAndGet()
+        } catch {
+          // the commit flipped planes: an 8-plane probe now refuses on the pin
+          case ex: IllegalArgumentException if ex.getMessage.contains("planes") =>
+            outcomes.incrementAndGet(); stop.set(true)
+          case t: Throwable => err.set(t); stop.set(true)
+        }
+      }
+    })
+    prober.start()
+    try IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
+    finally { prober.join(60000); stop.set(true); prober.join() }
+    assert(err.get() == null, s"client-visible probe failure: ${err.get()}")
+    assert(wrong.get() === 0, "every served answer must be the pre-migration one")
+    assert(outcomes.get() > 0, "the prober never completed a probe")
+    assert(answer(9).isEmpty, "the migrated index gates the re-sent vectors")
   }
 
   test("probe serves the pre-migration state through a staged rebucket data phase; " +
@@ -637,46 +720,37 @@ class IncrementalDedupSpec extends SparkSpec {
     val e = Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding")).limit(80)
     val idx = freshIndex("rebucket_serve")
-    import graft.ops.{IncrementalEmbeddingDedup, IndexMeta}
+    import graft.ops.IncrementalEmbeddingDedup
     IncrementalEmbeddingDedup.addBatch(spark, idx, e, "embedding", "vec_id",
       batchId = 0, dim = 64, planes = 8, minCos = 0.3)
     val gate = e.withColumn("vec_id", col("vec_id") + 1000000L)
-    def answer() = IncrementalEmbeddingDedup.probe(spark, idx, gate,
-      "embedding", "vec_id", dim = 64, planes = 8, minCos = 0.3)
+    def answer(planes: Int) = IncrementalEmbeddingDedup.probe(spark, idx, gate,
+      "embedding", "vec_id", dim = 64, planes = planes, minCos = 0.3)
       .select("vec_id").as[Long].collect().sorted.toSeq
-    val pre = answer()
+    val pre = answer(8)
     assert(pre.isEmpty, "fixture: the gate re-sends indexed vectors — all dups")
-    // DATA PHASE (staged marker up, live partitions untouched): the gate
-    // keeps answering with the pre-migration state
-    IndexMeta.setMigrating(spark, idx)
-    val before = indexState(idx)
-    assert(answer() === pre, "probe must serve through the staged data phase")
-    assert(indexState(idx) === before, "read-only: no healing, no mutation")
-    // SWAP WINDOW (commit marker up): refuse loudly
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commit = new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_commit")
-    val out = fs.create(commit, true)
-    try out.write("planes=9".getBytes("UTF-8")) finally out.close()
-    val ex = intercept[IllegalArgumentException](answer())
-    assert(ex.getMessage.contains("mid-SWAP"), ex.getMessage)
-    fs.delete(commit, false)
-    // LEGACY in-place migration debris (empty marker): refuse — those
-    // partitions may mix bucket spaces
-    val mig = new org.apache.hadoop.fs.Path(idx, "_graft_rebucket_inprogress")
-    val out2 = fs.create(mig, true)
-    try out2.write(Array.emptyByteArray) finally out2.close()
-    val ex2 = intercept[IllegalArgumentException](answer())
-    assert(ex2.getMessage.contains("PRE-r18"), ex2.getMessage)
-    // writers refuse under any marker; rerunning the migration heals all
-    intercept[IllegalArgumentException] {
-      IncrementalEmbeddingDedup.addBatch(spark, idx, gate, "embedding",
-        "vec_id", batchId = 1, dim = 64, planes = 8, minCos = 0.3)
-    }
+    // DATA PHASE done, commit pending (the new buckets written, unlisted):
+    // the gate keeps answering with the pre-migration state
     IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
-    assert(IncrementalEmbeddingDedup.probe(spark, idx, gate,
-      "embedding", "vec_id", dim = 64, planes = 9, minCos = 0.3)
-      .select("vec_id").as[Long].collect().isEmpty)
+    dropNewestVersion(idx)
+    val before = indexState(idx)
+    assert(answer(8) === pre, "probe must serve through the data phase")
+    assert(indexState(idx) === before, "read-only: no mutation")
+    // the swap is ONE commit — no window to refuse in; after it the old
+    // planes refuse on the parameter pin (the cutover) and the new serve
+    IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
+    val ex = intercept[IllegalArgumentException](answer(8))
+    assert(ex.getMessage.contains("planes"), ex.getMessage)
+    assert(answer(9).isEmpty)
+    // the previous layout's migration debris (partitions that may mix
+    // bucket spaces) still refuses where it matters: adopting such a dir
+    val dir = new java.io.File(idx)
+    deleteTree(new java.io.File(dir, "_graft_log"))
+    java.nio.file.Files.write(dir.toPath.resolve("_graft_meta"), "planes=9".getBytes("UTF-8"))
+    java.nio.file.Files.createFile(dir.toPath.resolve("_graft_rebucket_inprogress"))
+    val ex2 = intercept[IllegalArgumentException](
+      IncrementalEmbeddingDedup.markLegacyCommitted(spark, idx))
+    assert(ex2.getMessage.contains("_graft_rebucket_inprogress"), ex2.getMessage)
   }
 
   test("a rebucket crashed between staging-complete and the swap finishes on the " +
@@ -685,182 +759,93 @@ class IncrementalDedupSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding")).limit(80)
     val idx = freshIndex("rebucket_swapcrash")
     val clone = freshIndex("rebucket_swapcrash_clone")
-    import graft.ops.{IncrementalEmbeddingDedup, IndexMeta}
+    import graft.ops.IncrementalEmbeddingDedup
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(conf)
+    val fs = fsOf(idx)
     IncrementalEmbeddingDedup.addBatch(spark, idx, e, "embedding", "vec_id",
       batchId = 0, dim = 64, planes = 8, minCos = 0.3)
-    // clone the index, migrate the CLONE to 11 planes for a byte-true
-    // staged payload, then forge the crash state on the original:
-    // staging holds the complete new-plane partitions, both markers up,
-    // live buckets still at 8 planes, meta still says planes=8
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(idx),
       fs, new org.apache.hadoop.fs.Path(clone), false, conf)
     IncrementalEmbeddingDedup.rebucket(spark, clone, newPlanes = 11)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_staging"))
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(s"$clone/buckets/batch=0"), fs,
-      new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_staging/batch=0"),
-      false, conf)
-    IndexMeta.setMigrating(spark, idx)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_commit"), true)
-    try out.write("planes=11".getBytes("UTF-8")) finally out.close()
-    // mid-swap: probes refuse (loud, never a mixed answer)
-    intercept[IllegalArgumentException] {
-      IncrementalEmbeddingDedup.probe(spark, idx, e, "embedding", "vec_id",
-        dim = 64, planes = 8, minCos = 0.3)
-    }
-    // the next rebucket call finishes the swap deterministically
+    // forge the crash on the original: every new-plane partition staged,
+    // the commit never made — probes serve the old planes, never a mix
     IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 11)
-    assert(IndexMeta.read(spark, idx).get.apply("planes") === "11")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_commit")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_staging")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx, "_graft_rebucket_inprogress")))
+    dropNewestVersion(idx)
+    val staged = new java.io.File(s"$idx/buckets/batch=0").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(staged.size === 2, s"listed + staged dirs expected: $staged")
+    assert(IncrementalEmbeddingDedup.probe(spark, idx, e, "embedding", "vec_id",
+      dim = 64, planes = 8, minCos = 0.3).isEmpty)
+    // the next rebucket call finishes the migration deterministically and
+    // collects the crashed attempt's unlisted partitions
+    IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 11)
+    assert(latest(idx).meta("planes") === "11")
+    val live = new java.io.File(s"$idx/buckets/batch=0").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert((live intersect staged).size === 1, s"crashed dir must go: $live")
     // the finished index answers exactly like the cleanly-migrated clone
     val gate = e.withColumn("vec_id", col("vec_id") + 1000000L)
     def ans(d: String) = IncrementalEmbeddingDedup.probe(spark, d, gate,
       "embedding", "vec_id", dim = 64, planes = 11, minCos = 0.3)
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(ans(idx) === ans(clone))
-    // and the stored buckets are byte-equal to the clone's
-    val bi = spark.read.schema("id bigint, bucket bigint, rank bigint, batch int")
-      .parquet(s"$idx/buckets").orderBy("id")
-      .collect().toSeq
-    val bc = spark.read.schema("id bigint, bucket bigint, rank bigint, batch int")
-      .parquet(s"$clone/buckets").orderBy("id").collect().toSeq
-    assert(bi === bc)
+    // and the listed buckets are row-equal to the clone's
+    def listedBuckets(d: String) = graft.ops.IndexLog.read(spark, d, latest(d),
+      "buckets", "id bigint, bucket bigint, rank bigint", Int.MaxValue)
+      .orderBy("id").collect().toSeq
+    assert(listedBuckets(idx) === listedBuckets(clone))
   }
 
-  test("SwapGen: a maintenance swap bumping the generation mid-planning refuses " +
-      "with a retry pointer; an unchanged generation passes") {
-    val idx = freshIndex("swapgen")
-    import graft.ops.SwapGen
-    val g0 = SwapGen.read(spark, idx) // fresh index: empty token
-    SwapGen.bump(spark, idx)          // a swap's first-mutation bump
-    val ex = intercept[IllegalArgumentException] {
-      SwapGen.requireUnchanged(spark, idx, g0)
-    }
-    assert(ex.getMessage.contains("RETRY"), ex.getMessage)
-    val g1 = SwapGen.read(spark, idx)
-    SwapGen.requireUnchanged(spark, idx, g1) // unchanged: serves
-    SwapGen.bump(spark, idx) // bumps are monotonic nonces, never reused
-    assert(SwapGen.read(spark, idx) !== g1)
-    // end-to-end: a probe planned across a forged bump refuses — forge by
-    // bumping between the probe's entry read and its re-check is a timing
-    // we can't inject here; instead pin that compaction's real heal path
-    // (which bumps) leaves later probes serving normally
+  test("a probe planned against a version reads it across one maintenance " +
+      "commit; deletion waits one version") {
+    val idx = freshIndex("pinned")
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
+    val gate = df(Seq(doc(100, A), doc(101, B), doc(102, C)))
+    // a lazy probe froze its listings at the pre-compaction version; the
+    // compaction commits between its planning and its execution — the
+    // interleaving the old swap-generation token refused and retried
+    val planned = IncrementalDedup.probe(spark, idx, gate, "text", "doc_id",
+      eagerResult = false)
     IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 2)
-    val kept = IncrementalDedup.probe(spark, idx, df(Seq(doc(100, A), doc(102, C))),
-      "text", "doc_id").select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept === Seq(102L))
+    assert(planned.select("doc_id").as[Long].collect().sorted.toSeq === Seq(102L),
+      "the pinned version's data must survive the next commit")
+    // a second commit supersedes the pinned version: only now do the
+    // folded partitions go, and a frame still pinned to them fails
+    // loudly instead of serving a partial index
+    IncrementalDedup.addBatch(spark, idx, df(Seq(doc(3, C))), "text", "doc_id", 2)
+    assert(batchDirsOnDisk(idx, "bands") === Seq("batch=-1", "batch=2"))
+    intercept[Exception](planned.collect())
+    assert(IncrementalDedup.probe(spark, idx, gate, "text", "doc_id")
+      .select("doc_id").as[Long].collect().isEmpty, "fresh probes pin the new version")
   }
 
-  test("ProbeRetry: swap transients re-plan internally; non-protocol failures, " +
-      "stable missing roots, and exhausted budgets stay loud") {
-    import graft.ops.ProbeRetry
-    // a real root for the FNF-disambiguation check (the classifier of a
-    // missing-file shape requires the probed index root to EXIST)
-    val idx = "/tmp/graft_proberetry_spec_root"
-    val rfs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rfs.mkdirs(new org.apache.hadoop.fs.Path(idx))
-    // a SwapGen planning race on attempt 1 is retried and the settled
-    // attempt 2 serves — the forged token-bumped-between-listing-and-
-    // re-check shape, deterministic at the seam the retry wraps
-    val absorbed0 = ProbeRetry.absorbed
-    var calls = 0
-    val got = ProbeRetry.retry(spark, idx, "spec") {
-      calls += 1
-      if (calls == 1) throw new IllegalArgumentException(
-        "requirement failed: a maintenance swap at /x raced this probe's " +
-          "planning — RETRY the probe")
-      42
-    }
-    assert(got === 42 && calls === 2)
-    assert(ProbeRetry.absorbed - absorbed0 === 1,
-      "each absorbed transient must count (the serving measurements' receipt)")
-    // a frozen-listing FileNotFound (nested, as Spark wraps it) retries too
-    var fnf = 0
-    val got2 = ProbeRetry.retry(spark, idx, "spec") {
-      fnf += 1
-      if (fnf == 1) throw new RuntimeException("job aborted",
-        new java.io.FileNotFoundException(s"$idx/bands__compact_staging/part-0"))
-      7
-    }
-    assert(got2 === 7 && fnf === 2)
-    // the mid-SWAP window refusal is a transient (the swap is sub-second)
-    var sw = 0
-    ProbeRetry.retry(spark, idx, "spec") {
-      sw += 1
-      if (sw == 1) throw new IllegalArgumentException(
-        "requirement failed: index at /x is mid-SWAP in a parameter migration")
-    }
-    assert(sw === 2)
-    // a missing-file shape against an ABSENT index root is a STABLE state
-    // (never built, mistyped path) — it must surface on the FIRST attempt
-    // with zero sleeps and zero absorbed-counter inflation (r20)
-    val absent = "/tmp/graft_proberetry_spec_never_built"
-    rfs.delete(new org.apache.hadoop.fs.Path(absent), true)
-    val absorbed1 = ProbeRetry.absorbed
-    var stable = 0
-    val ex0 = intercept[RuntimeException](ProbeRetry.retry(spark, absent, "spec") {
-      stable += 1
-      throw new RuntimeException("planning failed",
-        new java.io.FileNotFoundException(s"$absent/bands"))
-    })
-    assert(stable === 1, s"stable missing root retried: $stable attempts")
-    assert(ex0.getCause.isInstanceOf[java.io.FileNotFoundException])
-    assert(ProbeRetry.absorbed === absorbed1,
-      "a stable refusal must not inflate the absorbed counter")
-    // non-protocol failures pass through on the FIRST attempt
-    var np = 0
-    val ex = intercept[IllegalStateException](ProbeRetry.retry(spark, idx, "spec") {
-      np += 1
-      throw new IllegalStateException("no index at /x to probe")
-    })
-    assert(np === 1 && ex.getMessage.contains("no index"))
-    // a PERSISTENT transient (crashed swap awaiting heal) exhausts the
-    // budget and surfaces loudly — the loud path is kept
-    var pers = 0
-    intercept[IllegalArgumentException](ProbeRetry.retry(spark, idx, "spec") {
-      pers += 1
-      throw new IllegalArgumentException("mid-SWAP forever")
-    })
-    assert(pers === 4, s"bounded budget, got $pers attempts")
-  }
-
-  test("a probe landing inside a live rebucket swap window retries INTERNALLY and " +
-      "serves once the swap ends — zero client-visible failures") {
-    val e = Tables.load(spark, sf(), "embeddings")
-      .select(col("vec_id"), col("embedding")).limit(60)
-    val idx = freshIndex("swapretryserve")
-    import graft.ops.IncrementalEmbeddingDedup
-    IncrementalEmbeddingDedup.addBatch(spark, idx, e, "embedding", "vec_id",
-      batchId = 0, dim = 64, planes = 8, minCos = 0.3)
-    val gate = e.withColumn("vec_id", col("vec_id") + 1000000L)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // forge a swap window that OUTLASTS the first probe attempt but ends
-    // inside the retry budget: the commit marker goes up now and a timer
-    // thread clears it 150 ms in (a real swap measures 0.05-0.07 s)
-    val commit = new org.apache.hadoop.fs.Path(s"$idx/buckets__rebucket_commit")
-    val out = fs.create(commit, true)
-    try out.write("planes=9".getBytes("UTF-8")) finally out.close()
-    val sweeper = new Thread(() => {
-      Thread.sleep(150)
-      fs.delete(commit, false)
-    })
-    sweeper.start()
-    // the probe call itself must succeed — the window is the protocol's
-    // business, not the caller's
-    val kept = IncrementalEmbeddingDedup.probe(spark, idx, gate,
-      "embedding", "vec_id", dim = 64, planes = 8, minCos = 0.3)
-      .select("vec_id").as[Long].collect().toSeq
-    sweeper.join()
-    assert(kept.isEmpty, "the gate re-sends indexed vectors — all dups")
+  test("index log: two writers committing the same version — exactly one wins, " +
+      "the loser gets ConcurrentModificationException") {
+    import graft.ops.{IndexLog, IndexSnapshot}
+    val idx = freshIndex("commitrace")
+    val v0 = IndexLog.commit(spark, idx, IndexSnapshot(-1, Map.empty),
+      IndexSnapshot(0, Map("k" -> "8")))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 25).foldLeft(v0) { (from, round) =>
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val tries = Seq("a", "b").map { who =>
+        pool.submit(new java.util.concurrent.Callable[Either[Throwable, IndexSnapshot]] {
+          def call() = {
+            gate.await()
+            try Right(IndexLog.commit(spark, idx, from,
+              from.copy(meta = from.meta.updated("w", s"$who$round"))))
+            catch { case t: Throwable => Left(t) }
+          }
+        })
+      }.map(_.get())
+      val won = tries.collect { case Right(s) => s }
+      assert(won.size === 1, s"round $round: ${won.size} winners")
+      tries.collect { case Left(t) => t }.foreach(t => assert(
+        t.isInstanceOf[java.util.ConcurrentModificationException], s"round $round: $t"))
+      assert(latest(idx) === won.head, "the winner's version is the one served")
+      won.head
+    } finally pool.shutdown()
   }
 
   test("probes keep answering correctly while a LIVE compaction runs (marker " +
@@ -899,7 +884,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits"), true)
+    toPreLogLayout(idx)
     // forge a legacy EMPTY batch: dirs exist in BOTH tables (so the twin
     // soundness check passes) but hold no parquet footers
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx/bands/batch=1"))
@@ -947,15 +932,15 @@ class IncrementalDedupSpec extends SparkSpec {
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A), doc(2, B))),
       "text", "doc_id", 0)
     // forge the crash window: batch 1 wrote its bands but died before the
-    // shingles append — so no commit marker either. (Run it whole, then
-    // remove the second write and the marker: exact on-disk crash state.)
+    // shingles append — so no commit either. (Run it whole, then remove
+    // the second write and the version: exact on-disk crash state.)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(10, C))),
       "text", "doc_id", 1)
+    dropNewestVersion(idx)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/shingles/batch=1"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits/batch=1"), false)
-    // pre-r16 this read served the orphaned bands: doc 10's copy would
-    // generate candidates whose verification join finds no shingle partner
-    // — silent under-dropping. Now it refuses loudly.
+    // serving the orphaned bands would let doc 10's copy generate
+    // candidates whose verification join finds no shingle partner —
+    // silent under-dropping. Appending past it refuses loudly.
     val ex = intercept[IllegalArgumentException] {
       IncrementalDedup.addBatch(spark, idx, df(Seq(doc(20, C))),
         "text", "doc_id", 2)
@@ -968,7 +953,7 @@ class IncrementalDedupSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       IncrementalDedup.promoteBase(spark, idx, uptoExclusive = 2)
     }
-    // replaying the crashed id heals (overwrite + re-mark), then the next
+    // replaying the crashed id heals (fresh write + commit), then the next
     // batch drops doc 20 against the now-whole index
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(10, C))),
       "text", "doc_id", 1)
@@ -987,16 +972,16 @@ class IncrementalDedupSpec extends SparkSpec {
       vecs(1L -> Seq(1f, 0f, 0f, 0f)), "embedding", "vec_id", 0, dim = 4)
     IncrementalEmbeddingDedup.addBatch(spark, idx,
       vecs(10L -> Seq(0f, 1f, 0f, 0f)), "embedding", "vec_id", 1, dim = 4)
-    // crash state: buckets written, vectors missing, no marker
+    // crash state: buckets written, vectors missing, no commit
+    dropNewestVersion(idx)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/vectors/batch=1"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits/batch=1"), false)
     val ex = intercept[IllegalArgumentException] {
       IncrementalEmbeddingDedup.addBatch(spark, idx,
         vecs(20L -> Seq(0f, 1f, 0f, 0f)), "embedding", "vec_id", 2, dim = 4)
     }
     assert(ex.getMessage.contains("UNCOMMITTED"))
-    // rebucket must also refuse: its orphan cleanup would otherwise erase
-    // the half-written buckets and with them the loud refusal
+    // rebucket refuses too, like every maintenance op: the crashed batch
+    // is replayed (at the planes it was written under) first
     intercept[IllegalArgumentException] {
       IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
     }
@@ -1012,53 +997,71 @@ class IncrementalDedupSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
-    // forge a pre-r16 index: data + meta present, marker dir absent
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits"), true)
+    // forge a pre-log index (data + _graft_meta, no markers, no log)
+    toPreLogLayout(idx)
     intercept[IllegalArgumentException] {
       IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
     }
+    // debris of an unfinished maintenance op refuses the adoption
+    val debris = new org.apache.hadoop.fs.Path(s"$idx/bands__compact_commit")
+    fs.create(debris, true).close()
+    val ex = intercept[IllegalArgumentException](
+      IncrementalDedup.markLegacyCommitted(spark, idx))
+    assert(ex.getMessage.contains("bands__compact_commit"), ex.getMessage)
+    fs.delete(debris, false)
     IncrementalDedup.markLegacyCommitted(spark, idx)
+    assert(latest(idx).version === 0L, "adopted as version 0")
+    IncrementalDedup.markLegacyCommitted(spark, idx) // a no-op once on the log
+    assert(latest(idx).version === 0L)
     val k1 = IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, A))),
       "text", "doc_id", 1)
     assert(k1.isEmpty, "doc 2 duplicates legacy doc 1 after the migration stamp")
   }
 
   test("a meta-less dir that already holds index data is refused, not adopted") {
-    import graft.ops.IndexMeta
     val idx = freshIndex("legacymeta")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(idx)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
-    // forge a pre-meta legacy index (may predate the stored rank column):
-    // stamping fresh meta over it would trust a schema the footers may not
-    // have — every rank reads NULL and duplicates are silently KEPT
-    fs.delete(new org.apache.hadoop.fs.Path(idx, "_graft_meta"), false)
+    // forge an index whose log is gone (or never existed): stamping a
+    // fresh version over it would trust data no version vouches for
+    fs.delete(new org.apache.hadoop.fs.Path(idx, "_graft_log"), true)
     val ex = intercept[IllegalArgumentException] {
       IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, A))), "text", "doc_id", 1)
     }
-    assert(ex.getMessage.contains("_graft_meta") &&
-      ex.getMessage.contains("rebuild"))
-    assert(IndexMeta.read(spark, idx).isEmpty,
-      "the refusal must not have stamped fresh meta")
+    assert(ex.getMessage.contains("_graft_log") &&
+      ex.getMessage.contains("rebuild") &&
+      ex.getMessage.contains("markLegacyCommitted"), ex.getMessage)
+    assert(graft.ops.IndexLog.latest(spark, idx).isEmpty,
+      "the refusal must not have stamped a fresh version")
+    // readers refuse the same way rather than serve an empty index
+    intercept[IllegalArgumentException] {
+      IncrementalDedup.probe(spark, idx, df(Seq(doc(2, A))), "text", "doc_id")
+    }
+    intercept[IllegalArgumentException](IncrementalDedup.indexBucketStats(spark, idx))
+    // without its parameter file the pre-log layout cannot be adopted
+    intercept[IllegalArgumentException](IncrementalDedup.markLegacyCommitted(spark, idx))
   }
 
-  test("IndexMeta.write publishes atomically: a crashed write leaves the old meta serving") {
-    import graft.ops.IndexMeta
-    val idx = freshIndex("metaatomic")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  test("index log: a crash between the temp write and the link leaves version N " +
+      "serving") {
+    val idx = freshIndex("logatomic")
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
-    val before = IndexMeta.read(spark, idx).get
-    // a completed write leaves no temp file behind
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx, "_graft_meta.tmp")))
-    // forge a crash mid-write: a truncated temp next to the live meta —
-    // the read path must keep serving the committed copy untouched
-    val out = fs.create(new org.apache.hadoop.fs.Path(idx, "_graft_meta.tmp"), true)
-    try out.write("k=".getBytes("UTF-8")) finally out.close()
-    assert(IndexMeta.read(spark, idx).get === before)
+    val before = latest(idx)
+    // a completed commit leaves no temp file behind
+    val log = new java.io.File(s"$idx/_graft_log")
+    assert(log.list().forall(n => !n.startsWith(".tmp-")), log.list().toSeq)
+    // forge a writer that died after writing its temp (here a truncated
+    // would-be version N+1 that drops every batch) and before linking it
+    java.nio.file.Files.write(log.toPath.resolve(".tmp-forged"),
+      "meta\tk\t5\n".getBytes("UTF-8"))
+    assert(latest(idx) === before, "version N must keep serving")
+    assert(IncrementalDedup.probe(spark, idx, df(Seq(doc(100, A), doc(101, C))),
+      "text", "doc_id").select("doc_id").as[Long].collect().toSeq === Seq(101L))
+    // the next writer commits N+1 normally; the dead temp is never read
     val k1 = IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, A))),
       "text", "doc_id", 1)
-    assert(k1.isEmpty, "probe must run against the intact committed meta")
+    assert(k1.isEmpty, "the batch must run against the intact version N")
+    assert(latest(idx).version === before.version + 1)
   }
 
   test("tablePrefix keeps its fixed prefix and disambiguates by full-path hash") {
@@ -1077,7 +1080,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("rebucket heals a buckets/vectors partition-layout divergence (crashed compaction)") {
-    import graft.ops.{IncrementalEmbeddingDedup, IndexCompaction}
+    import graft.ops.{IncrementalEmbeddingDedup, IndexLog}
     val e = Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 60)
     val b0 = e.filter(col("vec_id") < 30)
@@ -1088,28 +1091,26 @@ class IncrementalDedupSpec extends SparkSpec {
       "vec_id", 0, dim = 64, planes = 8, minCos = 0.3)
     IncrementalEmbeddingDedup.addBatch(spark, idx, b1, "embedding",
       "vec_id", 1, dim = 64, planes = 8, minCos = 0.3)
-    // forge compactIndex dying between its two folds: BUCKETS folded to
-    // batch=-1, VECTORS still at batch=0..1
-    IndexCompaction.compact(spark, idx, "buckets",
-      "id bigint, bucket bigint, rank bigint", uptoExclusive = 2,
-      clusterBy = "bucket")
-    val bdirs = new java.io.File(s"$idx/buckets").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(bdirs.toSeq === Seq("batch=-1"), s"forge failed: ${bdirs.toSeq}")
-    // pre-fix, rebucket rewrote only the partitions vectors enumerate —
-    // the stale old-plane batch=-1 rows survived and probes saw duplicate
-    // ids across mixed bucket spaces; now the orphan is deleted
+    // forge a version whose BUCKETS table lists a partition with no
+    // vectors twin (batch 0's old-plane rows again, as a compaction that
+    // folded one table and not the other would leave them) — the shape
+    // that used to survive a rebucket as duplicate ids across bucket spaces
+    val snap = latest(idx)
+    val orphan = "buckets/batch=5/w-orphan"
+    org.apache.hadoop.fs.FileUtil.copy(fsOf(idx),
+      new org.apache.hadoop.fs.Path(idx, snap.batches("buckets")(0).head), fsOf(idx),
+      new org.apache.hadoop.fs.Path(idx, orphan), false, spark.sparkContext.hadoopConfiguration)
+    IndexLog.commit(spark, idx, snap, snap.copy(parts = snap.parts.updated("buckets",
+      snap.batches("buckets").updated(5, Seq(orphan)))))
+    // the migration lists buckets for exactly the vectors batches
     IncrementalEmbeddingDedup.rebucket(spark, idx, newPlanes = 9)
-    val healed = new java.io.File(s"$idx/buckets").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(healed.toSeq === Seq("batch=0", "batch=1"),
-      s"orphaned batch=-1 must be deleted, got ${healed.toSeq}")
-    // no duplicate ids across mixed bucket spaces survive the heal
-    val buckets01 = spark.read
-      .schema("id bigint, bucket bigint, rank bigint, batch int")
-      .parquet(s"$idx/buckets").filter(col("batch") < 2)
+    assert(listedDirs(idx, "buckets").keySet === Set(0, 1),
+      s"orphaned batch=5 must not be listed, got ${latest(idx)}")
+    // no duplicate ids across mixed bucket spaces survive the migration
+    val buckets01 = IndexLog.read(spark, idx, latest(idx), "buckets",
+      "id bigint, bucket bigint, rank bigint", Int.MaxValue)
     assert(buckets01.groupBy("id").count().filter(col("count") > 1).isEmpty,
-      "an id must appear in exactly one partition after the heal")
+      "an id must appear in exactly one partition after the migration")
     assert(buckets01.select("id").distinct().count() === nTotal)
     // and the healed index answers: identical re-sent vectors (fresh ids)
     // all drop against their originals at the new plane count
@@ -1183,6 +1184,11 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(kept === plainKept,
       "the promoted layout must not change the probe's answer")
     assert(indexState(idx) === before, "probe must not mutate the promoted index")
+    // a promoted index written before the log adopts with its catalog base
+    toPreLogLayout(idx)
+    IncrementalDedup.markLegacyCommitted(spark, idx)
+    assert(IncrementalDedup.probe(spark, idx, pr, "text", "doc_id", minJaccard = 0.8)
+      .select("doc_id").as[Long].collect().sorted.toSeq === plainKept)
     dropPromotedTables()
   }
 
@@ -1197,7 +1203,7 @@ class IncrementalDedupSpec extends SparkSpec {
     IncrementalDedup.addBatch(spark, idx, ref, "text", "doc_id", 0)
     val eager = IncrementalDedup.probe(spark, idx, pr, "text", "doc_id")
     assert(eager.queryExecution.logical.isInstanceOf[LogicalRDD],
-      "the serving default stays eager (transients fire inside the retry)")
+      "the serving default stays eager (the result outlives the pinned files)")
     val lazyOut = IncrementalDedup.probe(spark, idx, pr, "text", "doc_id",
       eagerResult = false)
     assert(!lazyOut.queryExecution.optimizedPlan.exists(_.isInstanceOf[LogicalRDD]),
@@ -1290,7 +1296,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("addBatchAuto sizes planes from the expected corpus once, then reads the pin") {
-    import graft.ops.{IncrementalEmbeddingDedup, IndexMeta, Similarity}
+    import graft.ops.{IncrementalEmbeddingDedup, Similarity}
     val idx = freshIndex("autoplanes")
     def vecs(rows: (Long, Seq[Float])*) = rows.toSeq.toDF("vec_id", "embedding")
     val want = Similarity.planesFor(1000000L, targetBucket = 100)
@@ -1298,7 +1304,7 @@ class IncrementalDedupSpec extends SparkSpec {
     IncrementalEmbeddingDedup.addBatchAuto(spark, idx,
       vecs(1L -> Seq(1f, 0f, 0f, 0f)), "embedding", "vec_id", 0, dim = 4,
       expectedCorpusRows = 1000000L)
-    assert(IndexMeta.read(spark, idx).get("planes").toInt === want,
+    assert(latest(idx).meta("planes").toInt === want,
       "first write must pin the corpus-derived plane count")
     // later batches read the PIN, not the caller's (changed) estimate —
     // no meta-mismatch throw, no silent re-derivation
@@ -1390,15 +1396,14 @@ class IncrementalDedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(probeKept() === Seq(102L))
     // forge a single writer mid-addBatch: batch 2 (doc 10 = C) has written
-    // its bands but not its shingles — and so no commit marker. (Run it
-    // whole, then remove the second write and the marker: the exact
-    // in-flight on-disk state a concurrent probe can observe.)
+    // its bands but not its shingles — and so no commit. (Run it whole,
+    // then remove the second write and the version: the exact in-flight
+    // on-disk state a concurrent probe can observe.)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(10, C))), "text", "doc_id", 2)
+    dropNewestVersion(idx)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/shingles/batch=2"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits/batch=2"), false)
-    // pre-r17 every probe here threw (requireCommitted) — the gate went
-    // DOWN for the whole append. Now it serves the pre-batch answer:
-    // batch 2's orphaned bands are simply not visible yet.
+    // the gate serves the pre-batch answer: batch 2's orphaned bands are
+    // simply not listed yet
     assert(probeKept() === Seq(102L),
       "mid-append probe must serve the committed prefix, not refuse (and " +
         "not see the in-flight bands without their shingles)")
@@ -1424,26 +1429,25 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(probeKept() === Seq.empty,
       "once batch 2 commits, its content gates the probe")
     // edge: an index whose ONLY batch is in-flight serves the empty prefix
+    // (its first version pinned the parameters before any data)
     val idx2 = freshIndex("probemidfirst")
     IncrementalDedup.addBatch(spark, idx2, df(Seq(doc(1, A))), "text", "doc_id", 0)
+    dropNewestVersion(idx2)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx2/shingles/batch=0"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx2/_graft_commits/batch=0"), false)
     val k2 = IncrementalDedup.probe(spark, idx2, df(Seq(doc(100, A))),
       "text", "doc_id").select("doc_id").as[Long].collect().toSeq
     assert(k2 === Seq(100L), "empty committed prefix keeps everything")
   }
 
   test("probe refuses uncommitted batches that are not a single in-flight tail") {
-    // (a) a multi-batch PRE-MARKER index (r15-era, or lost markers): the
-    // committed-prefix filter would silently serve an EMPTY index and the
-    // gate would keep every duplicate — it must refuse with the migration
-    // pointer instead
+    // (a) a multi-batch PRE-LOG index (no version lists any batch):
+    // serving the listed nothing would silently keep every duplicate — it
+    // must refuse with the migration pointer instead
     val idx = freshIndex("probelegacy")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(idx)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits"), true)
+    toPreLogLayout(idx)
     val pr = df(Seq(doc(100, A), doc(102, C)))
     val e = intercept[IllegalArgumentException] {
       IncrementalDedup.probe(spark, idx, pr, "text", "doc_id").collect()
@@ -1455,21 +1459,29 @@ class IncrementalDedupSpec extends SparkSpec {
     val kept = IncrementalDedup.probe(spark, idx, pr, "text", "doc_id")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept === Seq(102L))
-    // (b) a GAP below the tail: batch 0's marker gone while batch 1 is
-    // committed — markers were deleted out of band (a live writer can't
-    // produce this; requireCommitted stops it from appending past a
-    // crash). Serving would under-drop batch 0's content silently.
+    // (b) uncommitted data BELOW a committed batch (a crashed batch 1
+    // with batch 2 listed past it — a live writer refuses to produce
+    // this): probes serve exactly the listed batches, never the crashed
+    // one, and the writer keeps refusing until it is replayed
     val idx2 = freshIndex("probegap")
     IncrementalDedup.addBatch(spark, idx2, df(Seq(doc(1, A))), "text", "doc_id", 0)
-    IncrementalDedup.addBatch(spark, idx2, df(Seq(doc(2, B))), "text", "doc_id", 1)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx2/_graft_commits/batch=0"), false)
-    intercept[IllegalArgumentException] {
-      IncrementalDedup.probe(spark, idx2, pr, "text", "doc_id").collect()
+    IncrementalDedup.addBatch(spark, idx2, df(Seq(doc(2, B))), "text", "doc_id", 2)
+    val crashed = "bands/batch=1/w-crashed"
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(idx2, listedDirs(idx2, "bands")(2).head), fs,
+      new org.apache.hadoop.fs.Path(idx2, crashed), false, spark.sparkContext.hadoopConfiguration)
+    val pr2 = df(Seq(doc(100, A), doc(101, B), doc(102, C)))
+    assert(IncrementalDedup.probe(spark, idx2, pr2, "text", "doc_id")
+      .select("doc_id").as[Long].collect().sorted.toSeq === Seq(102L))
+    // (c) occupancy observability counts listed data only: every bucket
+    // holds one doc — served, the crashed copy of doc 2's bands would
+    // double its two buckets
+    assert(IncrementalDedup.indexBucketStats(spark, idx2).head()
+      .getAs[Long]("max_bucket") === 1L)
+    val ex = intercept[IllegalArgumentException] {
+      IncrementalDedup.addBatch(spark, idx2, df(Seq(doc(3, C))), "text", "doc_id", 3)
     }
-    // (c) the same guard covers occupancy observability
-    intercept[IllegalArgumentException] {
-      IncrementalDedup.indexBucketStats(spark, idx2).collect()
-    }
+    assert(ex.getMessage.contains("UNCOMMITTED") && ex.getMessage.contains("1"))
   }
 
   test("EMBEDDING probe serves the committed prefix mid-append the same way") {
@@ -1486,11 +1498,11 @@ class IncrementalDedupSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(probeKept() === Seq(2L))
     // in-flight batch 1 indexes vec 2's direction: buckets written,
-    // vectors missing, no marker
+    // vectors missing, no commit
     IncrementalEmbeddingDedup.addBatch(spark, idx,
       vecs(20L -> Seq(0f, 1f, 0f, 0f)), "embedding", "vec_id", 1, dim = 4)
+    dropNewestVersion(idx)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/vectors/batch=1"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits/batch=1"), false)
     assert(probeKept() === Seq(2L),
       "mid-append probe must serve the pre-batch answer, not refuse")
     intercept[IllegalArgumentException] {
@@ -1516,18 +1528,18 @@ class IncrementalDedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(probeKept() === Seq.empty,
       "base (A, B) and committed delta (C) must all gate")
-    // in-flight delta batch 3: bands written, shingles missing, no marker
+    // in-flight delta batch 3: bands written, shingles missing, no commit
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(4, C))), "text", "doc_id", 3)
+    dropNewestVersion(idx)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/shingles/batch=3"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits/batch=3"), false)
     assert(probeKept() === Seq.empty,
       "the promoted probe must serve base + committed delta mid-append")
-    // the committed prefix excludes ONLY the in-flight batch — drop the
-    // committed delta too and C's copy must pass (proves batch 2 was
+    // the committed prefix excludes ONLY the in-flight batch — a version
+    // without the committed delta lets C's copy pass (proves batch 2 was
     // genuinely served from the delta, not the base)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/bands/batch=2"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/shingles/batch=2"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits/batch=2"), false)
+    val snap = latest(idx)
+    graft.ops.IndexLog.commit(spark, idx, snap,
+      snap.copy(parts = snap.parts.map { case (t, bs) => t -> (bs - 2) }))
     assert(probeKept() === Seq(102L),
       "with the delta gone, only the base's A and B still gate")
     dropPromotedTables()
@@ -1642,18 +1654,18 @@ class IncrementalDedupSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
-    // forge a legacy index with a REAL orphaned half-write: no marker dir
-    // at all (pre-marker era) and batch 1's shingles missing
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits"), true)
+    // forge a legacy index with a REAL orphaned half-write: the pre-log
+    // layout, no markers, and batch 1's shingles missing
+    toPreLogLayout(idx)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/shingles/batch=1"), true)
-    // pre-r17 this stamped batch 1 committed (present in bands = enough),
-    // silently baking in the under-drop. Now it fails loudly, naming it.
+    // listing batch 1 (present in bands = enough) would silently bake in
+    // the under-drop; it fails loudly, naming it
     val ex = intercept[IllegalArgumentException] {
       IncrementalDedup.markLegacyCommitted(spark, idx)
     }
     assert(ex.getMessage.contains("only one") && ex.getMessage.contains("1"),
       s"must name the one-sided batch, got: ${ex.getMessage}")
-    // heal: drop the orphaned half too, stamp the sound prefix, replay
+    // heal: drop the orphaned half too, adopt the sound prefix, replay
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/bands/batch=1"), true)
     IncrementalDedup.markLegacyCommitted(spark, idx)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
@@ -1668,7 +1680,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_graft_commits"), true)
+    toPreLogLayout(idx)
     // forge a pre-rank-era batch: rewrite batch 0's bands WITHOUT the
     // stored rank column (reading it through the declared schema would
     // yield NULL ranks — the representative filter then excludes every
@@ -1684,9 +1696,8 @@ class IncrementalDedupSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("rank") && ex.getMessage.contains("0"),
       s"must name the rank-less batch, got: ${ex.getMessage}")
-    // heal: replay batch 0 (same data, same id) writes the modern layout
-    // — but markers are still absent for batch 1, so replay refuses until
-    // the migration runs; delete the stale half and migrate the rest
+    // heal: delete the stale batch, adopt the rest, then replay batch 0
+    // (same data, same id) in the modern layout
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/bands/batch=0"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/shingles/batch=0"), true)
     IncrementalDedup.markLegacyCommitted(spark, idx)
@@ -1699,43 +1710,33 @@ class IncrementalDedupSpec extends SparkSpec {
   test("READ-ONLY probe serves THROUGH a pending compaction swap — the pre-swap " +
       "answer, without healing") {
     val idx = freshIndex("probecompactpend")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(1, A))), "text", "doc_id", 0)
     IncrementalDedup.addBatch(spark, idx, df(Seq(doc(2, B))), "text", "doc_id", 1)
     val gate = df(Seq(doc(100, A), doc(101, B), doc(102, C)))
     val preSwap = IncrementalDedup.probe(spark, idx, gate, "text", "doc_id")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(preSwap === Seq(102L), "fixture: A and B indexed, C novel")
-    // forge a compaction swap caught mid-flight for BOTH tables: staging
-    // complete (batch 0's rows base-shaped), folded partition not yet
-    // deleted, marker holding uptoExclusive=1
-    for (table <- Seq("bands", "shingles")) {
-      spark.read.parquet(s"$idx/$table/batch=0")
-        .write.parquet(s"$idx/${table}__compact_staging")
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$idx/${table}__compact_commit"), true)
-      try out.write("1".getBytes("UTF-8")) finally out.close()
-    }
+    // forge a compaction caught mid-flight for BOTH tables: base written
+    // (batch 0's rows), commit pending
+    IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 1)
+    dropNewestVersion(idx)
     val before = indexState(idx)
-    // mid-swap, folded partitions still on disk: the gate keeps answering
-    // with the pre-swap answer — maintenance is no longer probe downtime
+    // mid-swap: the gate keeps answering with the pre-swap answer —
+    // maintenance is no longer probe downtime
     assert(IncrementalDedup.probe(spark, idx, gate, "text", "doc_id")
       .select("doc_id").as[Long].collect().sorted.toSeq === preSwap,
-      "probe mid-swap (staged copy complete, deletes pending) must serve " +
-        "the pre-swap answer")
+      "probe mid-swap (base written, commit pending) must serve the " +
+        "pre-swap answer")
     assert(indexState(idx) === before,
-      "a serving probe must leave the index byte-identical — no healing")
-    // deeper into the swap: folded partitions deleted, publish rename
-    // still pending — the staged copy alone carries the folded content
-    for (table <- Seq("bands", "shingles"))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$idx/$table/batch=0"), true)
+      "a serving probe must leave the index byte-identical")
+    // past the commit, the folded partition still on disk until the next
+    // one: the base alone carries the folded content
+    IncrementalDedup.compactIndex(spark, idx, uptoExclusive = 1)
+    assert(listedDirs(idx, "bands").keySet === Set(-1, 1))
     assert(IncrementalDedup.probe(spark, idx, gate, "text", "doc_id")
       .select("doc_id").as[Long].collect().sorted.toSeq === preSwap,
-      "probe mid-delete must serve the staged copy")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands__compact_commit")),
-      "the probe must not have consumed the marker")
-    // the next WRITING read heals deterministically; the probe answer is
+      "probe after the commit must serve the base")
+    // the next write collects the folded partition; the probe answer is
     // unchanged across the whole maintenance cycle
     val k = IncrementalDedup.addBatch(spark, idx, df(Seq(doc(10, C))),
       "text", "doc_id", 2)
@@ -1743,7 +1744,8 @@ class IncrementalDedupSpec extends SparkSpec {
     val kept = IncrementalDedup.probe(spark, idx,
       df(Seq(doc(100, A), doc(101, C))), "text", "doc_id")
       .select("doc_id").as[Long].collect().toSeq
-    assert(kept.isEmpty, "healed index gates both the folded and fresh content")
+    assert(kept.isEmpty, "the index gates both the folded and fresh content")
+    assert(batchDirsOnDisk(idx, "bands") === Seq("batch=-1", "batch=1", "batch=2"))
   }
 
   test("probe serves through a live promoteBase: staged base tables are " +
@@ -1756,33 +1758,28 @@ class IncrementalDedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq
     val preSwap = answer()
     assert(preSwap === Seq(102L))
-    // forge a promoteBase caught AFTER both staged bucketed-table writes
-    // but BEFORE its commit (the meta write): exactly promoteBase's own
-    // sequence, stopped one step short
-    import graft.ops.IndexBase
-    val prefix = IndexBase.tablePrefix(idx)
-    IndexBase.promoteOne(spark, idx, "bands",
-      "doc_id bigint, band int, band_key string, rank bigint",
-      bucketKey = "band_key", sortCols = Seq("band_key", "band", "rank"),
-      buckets = 4, prevTable = None, lower = None, upto = 2,
-      tName = s"${prefix}_bands_2")
-    IndexBase.promoteOne(spark, idx, "shingles",
-      "doc_id bigint, shs array<string>, nsh int", bucketKey = "doc_id",
-      sortCols = Seq("doc_id"), buckets = 4, prevTable = None, lower = None,
-      upto = 2, tName = s"${prefix}_shingles_2")
-    assert(answer() === preSwap,
-      "mid-promotion (staged tables written, meta not committed) the probe " +
-        "must serve the pre-swap delta state")
-    // the real promoteBase commits (idempotently re-staging) — same answer
+    // forge a promoteBase caught AFTER both bucketed-table writes but
+    // BEFORE its commit: the tables exist, no version lists them
     IncrementalDedup.promoteBase(spark, idx, uptoExclusive = 2, buckets = 4)
+    dropNewestVersion(idx)
+    assert(!latest(idx).meta.contains("base_upto"))
+    assert(answer() === preSwap,
+      "mid-promotion (tables written, version not committed) the probe " +
+        "must serve the pre-swap delta state")
+    // the real promoteBase commits (re-staging) — same answer
+    IncrementalDedup.promoteBase(spark, idx, uptoExclusive = 2, buckets = 4)
+    assert(latest(idx).meta.get("base_upto").contains("2"))
     assert(answer() === preSwap,
       "post-promotion the probe serves the same content from the base")
+    // the crashed attempt's unlisted tables and dirs went with the commit
+    val prefix = graft.ops.IndexBase.tablePrefix(idx)
+    assert(spark.catalog.listTables().collect().count(_.name.startsWith(prefix)) === 2)
+    assert(new java.io.File(idx).list().count(_.contains("_base_")) === 2)
+    dropPromotedTables()
   }
 
   test("EMBEDDING twin: probe serves through a pending compaction swap") {
     val idx = freshIndex("embprobecompactpend")
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val e = Tables.load(spark, sf(), "embeddings")
       .select(col("vec_id"), col("embedding"))
     val m = e.agg(max("vec_id")).head.getLong(0)
@@ -1796,21 +1793,21 @@ class IncrementalDedupSpec extends SparkSpec {
     val preSwap = IncrementalEmbeddingDedup.probe(spark, idx, gate,
       "embedding", "vec_id", dim)
       .select("vec_id").as[Long].collect().sorted.toSeq
-    // forge the mid-swap state for both tables (fold batch 0, upto=1)
-    for (table <- Seq("buckets", "vectors")) {
-      spark.read.parquet(s"$idx/$table/batch=0")
-        .write.parquet(s"$idx/${table}__compact_staging")
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$idx/${table}__compact_commit"), true)
-      try out.write("1".getBytes("UTF-8")) finally out.close()
-      fs.delete(new org.apache.hadoop.fs.Path(s"$idx/$table/batch=0"), true)
-    }
+    // forge the mid-swap state for both tables (fold batch 0, upto=1):
+    // base written, commit pending
+    IncrementalEmbeddingDedup.compactIndex(spark, idx, uptoExclusive = 1)
+    dropNewestVersion(idx)
     val before = indexState(idx)
     assert(IncrementalEmbeddingDedup.probe(spark, idx, gate,
       "embedding", "vec_id", dim)
       .select("vec_id").as[Long].collect().sorted.toSeq === preSwap,
       "embedding probe mid-swap must serve the pre-swap answer")
-    assert(indexState(idx) === before, "no healing from a read-only probe")
+    assert(indexState(idx) === before, "no mutation from a read-only probe")
+    // and past the commit, from the base
+    IncrementalEmbeddingDedup.compactIndex(spark, idx, uptoExclusive = 1)
+    assert(IncrementalEmbeddingDedup.probe(spark, idx, gate,
+      "embedding", "vec_id", dim)
+      .select("vec_id").as[Long].collect().sorted.toSeq === preSwap)
   }
 
   test("hashed-shingle probe: copies drop, novel content survives, layout pinned") {
