@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Statement}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
   * strictly stronger than the reference's sink path
   * (`ConnectSinkProducer.java:175-190,263-279`: fire-and-forget `send` with
   * a TODO for callbacks, transactions stubbed to no-ops → at-most/at-least
-  * once). Here each micro-batch runs delete+insert per key inside one
-  * transaction per partition, so replayed batches (at-least-once upstream)
-  * converge to exactly-once results in the table.
+  * once). Here each micro-batch updates the keys that exist in place and
+  * inserts the rest, inside one transaction per partition, so replayed
+  * batches (at-least-once upstream) converge to exactly-once results in the
+  * table.
   *
   * Scale: the upsert runs per PARTITION on the executors (no driver
   * collect); batch statements amortize round-trips. Key skew only matters
@@ -20,12 +21,16 @@ import org.apache.spark.sql.types._
   */
 object JdbcSink {
 
-  /** Upsert `df` into `table` keyed on `keyCols` (delete-then-insert per
-    * key, single transaction per partition).
+  /** Upsert `df` into `table` keyed on `keyCols`, one transaction per
+    * partition: one batched `UPDATE … SET <other columns> WHERE <keys>`,
+    * then an `INSERT` of exactly the rows whose update count was 0. A key is
+    * never deleted, so its row is rewritten in place. The driver must
+    * report per-row update counts; one that answers `SUCCESS_NO_INFO` gets
+    * [[JdbcUpdateCountUnknownException]] and the partition rolls back.
     *
-    * One row per key per batch: duplicate keys in a single batch would
-    * insert twice after the batched deletes (PK violation), and the same
-    * key on two partitions would race delete-vs-insert across concurrent
+    * One row per key per batch: duplicate keys in a single batch would both
+    * miss the update and insert twice (PK violation), and the same key on
+    * two partitions would race update-vs-insert across concurrent
     * transactions. With `versionCol` set the survivor is the MAX-version
     * row, version ties broken by the ordering of the remaining columns —
     * fully deterministic across retries/replays even when two rows share
@@ -59,34 +64,50 @@ object JdbcSink {
     cols.foreach(graft.SqlIdent.column)
     val insertSql = s"INSERT INTO $table (${cols.mkString(", ")}) " +
       s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    val deleteSql = s"DELETE FROM $table WHERE ${keyCols.map(k => s"$k = ?").mkString(" AND ")}"
     val keyIdx = keyCols.map(k => schema.fieldIndex(k))
+    val valueIdx = cols.indices.filterNot(keyIdx.contains)
+    // a key-only table still needs an UPDATE whose count says "exists"
+    val setClause =
+      if (valueIdx.isEmpty) s"${keyCols.head} = ${keyCols.head}"
+      else valueIdx.map(i => s"${cols(i)} = ?").mkString(", ")
+    val updateSql = s"UPDATE $table SET $setClause " +
+      s"WHERE ${keyCols.map(k => s"$k = ?").mkString(" AND ")}"
+    val updateIdx = valueIdx ++ keyIdx
 
     inTransactions(df, url) { (conn, rows) =>
-      val del = conn.prepareStatement(deleteSql)
-      val ins = conn.prepareStatement(insertSql)
-      rows.foreach { row =>
-        keyIdx.zipWithIndex.foreach { case (ki, pi) => bind(del, pi + 1, schema(ki).dataType, row, ki) }
-        del.addBatch()
-        cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
-        ins.addBatch()
+      val batch = rows.toArray
+      val upd = conn.prepareStatement(updateSql)
+      batch.foreach { row =>
+        updateIdx.zipWithIndex.foreach { case (ci, pi) => bind(upd, pi + 1, schema(ci).dataType, row, ci) }
+        upd.addBatch()
       }
-      Seq(del, ins)
+      val counts = upd.executeBatch()
+      if (counts.contains(Statement.SUCCESS_NO_INFO)) throw new JdbcUpdateCountUnknownException(
+        s"jdbc sink: the driver for $url reported SUCCESS_NO_INFO for a batched UPDATE of " +
+          s"$table, so the keys to INSERT are unknown; the partition's transaction was rolled back")
+      val ins = conn.prepareStatement(insertSql)
+      batch.iterator.zip(counts.iterator).foreach { case (row, n) =>
+        if (n == 0) {
+          cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
+          ins.addBatch()
+        }
+      }
+      ins.executeBatch()
     }
   }
 
-  /** One transaction per non-empty partition of `df`: `fill` prepares the
-    * statement batches for the partition's rows, they execute in the order
-    * returned, then one commit; any failure rolls the partition back.
+  /** One transaction per non-empty partition of `df`: `write` runs the
+    * partition's statements, then one commit; any failure rolls the
+    * partition back.
     */
   private def inTransactions(df: DataFrame, url: String)(
-      fill: (Connection, Iterator[Row]) => Seq[PreparedStatement]): Unit =
+      write: (Connection, Iterator[Row]) => Unit): Unit =
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         val conn: Connection = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)
-          fill(conn, rows).foreach(_.executeBatch())
+          write(conn, rows)
           conn.commit()
         } catch {
           case e: Throwable => conn.rollback(); throw e
@@ -125,7 +146,7 @@ object JdbcSink {
         cols.indices.foreach(i => bind(ins, i + 1, schema(i).dataType, row, i))
         ins.addBatch()
       }
-      Seq(ins)
+      ins.executeBatch()
     }
   }
 
@@ -142,3 +163,8 @@ object JdbcSink {
       }
       .start()
 }
+
+/** The JDBC driver answered a batched UPDATE with `Statement.SUCCESS_NO_INFO`,
+  * so the upsert cannot tell which keys already exist.
+  */
+class JdbcUpdateCountUnknownException(msg: String) extends SQLException(msg)

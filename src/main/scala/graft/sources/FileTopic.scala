@@ -1,11 +1,18 @@
 package graft.sources
 
+import java.io.InputStream
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.charset.CodingErrorAction
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -13,7 +20,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReportsSourceMetrics}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -36,15 +43,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * each line is one record `{"key": s|null, "value": s, "timestamp": ms,
   * "headers": [{"key": k, "value": v}]}` (text payloads; binary columns are
   * the UTF-8 bytes). Files are append-only logs: the stream offset is the
-  * per-file line count, so appended lines become the next micro-batch,
-  * replayable from the checkpoint like any DSv2 offset. Emitted record
-  * offsets are `segment_index << 32 | line`, unique and monotone per
-  * (topic, partition) across segment files — Kafka's per-partition offset
-  * contract — provided segment names sort in append order (the epoch-named
-  * sink guarantees this; hand-written fixtures should too).
+  * per-file count of `\n`-terminated lines, so appended lines become the
+  * next micro-batch, replayable from the checkpoint like any DSv2 offset. A
+  * last line still missing its `\n` is not counted, so a record that is
+  * half appended is never served. Emitted record offsets are
+  * `segment_index << 32 | line`, unique and monotone per (topic,
+  * partition) across segment files — Kafka's per-partition offset contract.
+  * A partition's segments are indexed in append order: by name, with the
+  * epoch of the sink's `e<epoch>p<partitionId>` segments (and of the older
+  * `e<epoch>t<taskId>` names) compared as a number.
+  *
+  * Each trigger costs what it serves, not the backlog: the stream scans only
+  * the bytes appended since its last look and keeps a sparse line → byte
+  * index, so readers seek to their first line. A segment that shrinks or is
+  * replaced is rescanned; if it then holds fewer lines than were served,
+  * the stream fails with [[FileTopicSegmentRewrittenException]].
   *
   * Options: `path` (required), `maxOffsetsPerTrigger` (admission control,
-  * name-compatible with the Kafka source), write side also `topic` and
+  * name-compatible with the Kafka source and split across partitions in
+  * proportion to their lag, as Kafka's is), write side also `topic` and
   * `numPartitions` (key-hash partitioner, null keys → partition 0).
   */
 class FileTopicSource extends TableProvider with DataSourceRegister {
@@ -55,6 +72,11 @@ class FileTopicSource extends TableProvider with DataSourceRegister {
       properties: util.Map[String, String]): Table =
     new FileTopicTable(properties)
 }
+
+/** A segment file lost lines the stream had already counted (it shrank, or
+  * was replaced by a shorter file): serving it would re-number records.
+  */
+class FileTopicSegmentRewrittenException(msg: String) extends IllegalStateException(msg)
 
 private[sources] object FileTopic {
   def dir(options: java.util.Map[String, String]): Path = {
@@ -73,6 +95,23 @@ private[sources] object FileTopic {
     (stem.substring(0, cut), stem.substring(cut + 1).toInt)
   }
 
+  private val SinkSegment = """([^.]*\.e)(\d+)([pt]\d+\.jsonl)""".r
+
+  /** Sort key of a segment within its partition: the name, with a sink
+    * segment's epoch zero-padded so `e10` follows `e9`. Other names, and
+    * one epoch's files among themselves, keep plain name order, which is
+    * the order checkpoints written before the padding already assume.
+    */
+  def appendOrder(fileName: String): String = fileName match {
+    case SinkSegment(head, epoch, tail) => f"$head${epoch.toLong}%019d$tail"
+    case _ => fileName
+  }
+
+  /** Each (topic, partition)'s segments in append order, partitions sorted. */
+  def byPartition(files: Iterable[String]): Seq[((String, Int), Seq[String])] =
+    files.toSeq.groupBy(topicPartition).toSeq.sortBy(_._1)
+      .map { case (tp, fs) => tp -> fs.sortBy(appendOrder) }
+
   def segments(dir: Path): Seq[Path] =
     if (!Files.isDirectory(dir)) Seq.empty
     else {
@@ -81,7 +120,7 @@ private[sources] object FileTopic {
       val s = Files.list(dir)
       try s.iterator().asScala
         .filter(p => p.getFileName.toString.endsWith(".jsonl"))
-        .toSeq.sortBy(_.getFileName.toString)
+        .toSeq.sortBy(p => appendOrder(p.getFileName.toString))
       finally s.close()
     }
 }
@@ -128,8 +167,67 @@ private[sources] object FileLinesOffset {
   }
 }
 
+/** What the stream has scanned of one segment file: `lines` complete lines
+  * end at byte `bytes`; `size` is the file size at the last look; `marks`
+  * maps every [[SegmentCursor.MarkEvery]]-th line (and line 0) to the byte
+  * it starts at. `fileKey` tells a replaced file from an appended one.
+  */
+private[sources] final class SegmentCursor(val fileKey: AnyRef) {
+  var bytes = 0L
+  var lines = 0L
+  var size = 0L
+  val marks = new util.TreeMap[java.lang.Long, java.lang.Long]()
+  marks.put(0L, 0L)
+
+  /** Count the `\n`-terminated lines in `[bytes, newSize)` of `path`. */
+  def scan(path: Path, newSize: Long): Unit = {
+    val ch = FileChannel.open(path, StandardOpenOption.READ)
+    try {
+      val buf = ByteBuffer.allocate(1 << 20)
+      val a = buf.array()
+      var pos = bytes
+      var eof = false
+      while (pos < newSize && !eof) {
+        buf.clear()
+        buf.limit(math.min(a.length.toLong, newSize - pos).toInt)
+        val n = ch.read(buf, pos)
+        if (n <= 0) eof = true
+        else {
+          var i = 0
+          while (i < n) {
+            if (a(i) == '\n') {
+              lines += 1
+              bytes = pos + i + 1
+              if (lines % SegmentCursor.MarkEvery == 0) marks.put(lines, bytes)
+            }
+            i += 1
+          }
+          pos += n
+        }
+      }
+    } finally ch.close()
+    size = newSize
+  }
+
+  /** The closest mark at or before `line`: (line, byte). */
+  def seek(line: Long): (Long, Long) = {
+    val m = marks.floorEntry(line)
+    (m.getKey, m.getValue)
+  }
+
+  /** Forget marks no batch can start from again (below the one at or
+    * before the committed `line`).
+    */
+  def dropBelow(line: Long): Unit =
+    marks.headMap(marks.floorKey(line), false).clear()
+}
+
+private[sources] object SegmentCursor {
+  val MarkEvery = 4096L
+}
+
 private[sources] class FileTopicStream(dir: Path, maxOffsetsPerTrigger: Long)
-    extends MicroBatchStream {
+    extends MicroBatchStream with ReportsSourceMetrics {
 
   override def initialOffset(): Offset = FileLinesOffset(Map.empty)
 
@@ -144,48 +242,125 @@ private[sources] class FileTopicStream(dir: Path, maxOffsetsPerTrigger: Long)
     }.toMap
   }
 
-  override def latestOffset(): Offset = {
-    val counts = FileTopic.segments(dir).map { p =>
-      val s = Files.lines(p)
-      try p.getFileName.toString -> s.count() finally s.close()
+  private val cursors = mutable.Map.empty[String, SegmentCursor]
+  /** Line counts of the last `latestOffset` scan, for [[metrics]]. */
+  @volatile private var available: Map[String, Long] = Map.empty
+
+  /** Bring `file`'s cursor up to the file's current size. A file that
+    * shrank or is a different file is rescanned from byte 0, and must still
+    * hold every line already served.
+    */
+  private def refresh(file: String): Option[SegmentCursor] = synchronized {
+    val path = dir.resolve(file)
+    val attrs =
+      try Some(Files.readAttributes(path, classOf[BasicFileAttributes]))
+      catch { case _: NoSuchFileException => None }
+    attrs.map { a =>
+      val same = cursors.get(file).filter(c => c.fileKey == a.fileKey() && c.size <= a.size())
+      val c = same.getOrElse {
+        val fresh = new SegmentCursor(a.fileKey())
+        cursors(file) = fresh
+        fresh
+      }
+      if (c.size != a.size()) c.scan(path, a.size())
+      val need = served.getOrElse(file, 0L)
+      if (c.lines < need) throw new FileTopicSegmentRewrittenException(
+        s"file-topic segment $path holds ${c.lines} complete lines, but $need were already " +
+          "served: it was truncated or replaced, and its records cannot keep their offsets")
+      c
     }
-    // admission control: grant at most maxOffsetsPerTrigger new lines,
-    // filename order (the analogue of Kafka's maxOffsetsPerTrigger)
-    var budget = maxOffsetsPerTrigger
-    val granted = counts.map { case (f, n) =>
-      val from = served.getOrElse(f, 0L)
-      val take = math.min(math.max(n - from, 0L), budget)
-      budget -= take
-      f -> (from + take)
+  }
+
+  override def latestOffset(): Offset = synchronized {
+    val listed = FileTopic.segments(dir).flatMap { p =>
+      val f = p.getFileName.toString
+      refresh(f).map(c => f -> c.lines)
     }.toMap
-    val o = FileLinesOffset(granted)
+    // a file that vanished keeps its served count, so the segment indices
+    // of the partition's later files (and their record offsets) stay put
+    val avail = served ++ listed
+    available = avail
+    val o = FileLinesOffset(admit(avail))
     bump(o)
     o
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+  /** Grant at most `maxOffsetsPerTrigger` new lines (the analogue of Kafka's
+    * option), split across topic-partitions in proportion to their lag as
+    * `KafkaMicroBatchStream.rateLimit` does: each gets the floor of its
+    * share, and the remainder goes one line each to the partitions whose
+    * share was 0, then to the rest, so the cap holds and no small partition
+    * starves while the budget covers one line per partition.
+    * Within a partition, earlier segments are granted first.
+    */
+  private def admit(avail: Map[String, Long]): Map[String, Long] = {
+    val parts = FileTopic.byPartition(avail.keys).map(_._2)
+    def lagOf(f: String) = math.max(avail(f) - served.getOrElse(f, 0L), 0L)
+    val lags = parts.map(_.map(lagOf).sum)
+    val total = lags.sum
+    val shares =
+      if (total <= maxOffsetsPerTrigger) lags
+      else {
+        val shares = lags.map(l => (BigInt(maxOffsetsPerTrigger) * l / total).toLong).toArray
+        var extra = maxOffsetsPerTrigger - shares.sum
+        shares.indices.sortBy(i => (shares(i) > 0, i)).foreach { i =>
+          if (extra > 0 && shares(i) < lags(i)) { shares(i) += 1; extra -= 1 }
+        }
+        shares.toSeq
+      }
+    parts.zip(shares).flatMap { case (files, share) =>
+      var budget = share
+      files.map { f =>
+        val from = served.getOrElse(f, 0L)
+        val take = math.min(lagOf(f), budget)
+        budget -= take
+        f -> (from + take)
+      }
+    }.toMap
+  }
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = synchronized {
     val s = start.asInstanceOf[FileLinesOffset].lines
     val e = end.asInstanceOf[FileLinesOffset]
     bump(e)
-    // record offsets must be unique+monotone per (topic, partition) ACROSS
-    // segment files (Kafka's contract) — base = segment index << 32, so a
-    // second epoch's file continues the sequence instead of restarting at 0.
-    // Segment names must sort in append order (the epoch-named sink
-    // guarantees it); indices derive from the offset's own file set, so a
-    // checkpoint replay reproduces identical offsets.
-    val segIndex: Map[String, Long] = e.lines.keys.toSeq.sorted
-      .groupBy(f => FileTopic.topicPartition(f))
-      .values.flatMap(_.zipWithIndex.map { case (f, i) => f -> i.toLong })
-      .toMap
-    e.lines.toSeq.sortBy(_._1).flatMap { case (f, hi) =>
-      val lo = s.getOrElse(f, 0L)
-      if (hi <= lo) None
-      else {
-        val (topic, part) = FileTopic.topicPartition(f)
-        Some(FileTopicPartition(dir.resolve(f).toString, topic, part, lo, hi,
-          segIndex(f) << 32): InputPartition)
+    // segment indices derive from the offset's own file set, so a
+    // checkpoint replay reproduces identical record offsets
+    FileTopic.byPartition(e.lines.keys).flatMap { case ((topic, part), files) =>
+      files.zipWithIndex.flatMap { case (f, i) =>
+        val lo = s.getOrElse(f, 0L)
+        val hi = e.lines(f)
+        if (hi <= lo) None
+        else {
+          // a replayed batch can be planned before the first latestOffset:
+          // build the cursor (and its index) here then
+          val c = cursors.get(f).filter(_.lines >= hi).orElse(refresh(f))
+            .filter(_.lines >= hi).getOrElse(throw new FileTopicSegmentRewrittenException(
+              s"file-topic segment ${dir.resolve(f)} no longer holds line $hi of a planned batch"))
+          val (markLine, markByte) = c.seek(lo)
+          Some(FileTopicPartition(dir.resolve(f).toString, topic, part, markByte, markLine,
+            lo, hi, i.toLong << 32): InputPartition)
+        }
       }
     }.toArray
+  }
+
+  /** Kafka's lag metrics, per topic-partition, from the last scan's counts. */
+  override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] = {
+    val avail = available
+    latestConsumedOffset.map[util.Map[String, String]] { o =>
+      val consumed = o match {
+        case f: FileLinesOffset => f.lines
+        case other => FileLinesOffset.fromJson(other.json()).lines
+      }
+      val behind = FileTopic.byPartition(avail.keys).map { case (_, files) =>
+        files.map(f => math.max(avail(f) - consumed.getOrElse(f, 0L), 0L)).sum
+      }
+      if (behind.isEmpty) util.Collections.emptyMap()
+      else Map(
+        "minOffsetsBehindLatest" -> behind.min.toString,
+        "maxOffsetsBehindLatest" -> behind.max.toString,
+        "avgOffsetsBehindLatest" -> (behind.sum.toDouble / behind.size).toString).asJava
+    }.orElse(util.Collections.emptyMap())
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new FileTopicReaderFactory
@@ -194,59 +369,165 @@ private[sources] class FileTopicStream(dir: Path, maxOffsetsPerTrigger: Long)
     bump(o)
     o
   }
-  override def commit(end: Offset): Unit = bump(end.asInstanceOf[FileLinesOffset])
+  override def commit(end: Offset): Unit = synchronized {
+    val e = end.asInstanceOf[FileLinesOffset]
+    bump(e)
+    e.lines.foreach { case (f, n) => cursors.get(f).foreach(_.dropBelow(n)) }
+  }
   override def stop(): Unit = ()
 }
 
+/** Lines `[startLine, endLine)` of `file`; reading starts at byte
+  * `seekByte`, where line `seekLine` (≤ `startLine`) begins.
+  */
 private[sources] case class FileTopicPartition(file: String, topic: String,
-    partition: Int, startLine: Long, endLine: Long,
+    partition: Int, seekByte: Long, seekLine: Long, startLine: Long, endLine: Long,
     baseOffset: Long) extends InputPartition
 
 private[sources] class FileTopicReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[FileTopicPartition]
     new PartitionReader[InternalRow] {
-      private val mapper = new ObjectMapper
-      private val reader = Files.newBufferedReader(Paths.get(p.file), UTF_8)
-      private var line: String = _
-      private var lineNo: Long = {
-        var skipped = 0L
-        while (skipped < p.startLine && reader.readLine() != null) skipped += 1
-        p.startLine
+      private val in: InputStream = {
+        val ch = FileChannel.open(Paths.get(p.file), StandardOpenOption.READ)
+        ch.position(p.seekByte)
+        Channels.newInputStream(ch)
       }
+      private val lines = new LineReader(in)
+      private val envelope = new EnvelopeParser
+      private val topic = UTF8String.fromString(p.topic)
+      private var lineNo = p.seekLine
+      while (lineNo < p.startLine) { nextLine(); lineNo += 1 }
+      private var row: InternalRow = _
+
+      private def nextLine(): Unit =
+        if (!lines.next()) throw new FileTopicSegmentRewrittenException(
+          s"file-topic segment ${p.file} ended before line ${p.endLine} of a planned batch")
 
       override def next(): Boolean = {
         if (lineNo >= p.endLine) return false
-        line = reader.readLine()
-        line != null
-      }
-
-      override def get(): InternalRow = {
-        val node = mapper.readTree(line)
-        def bytes(field: String): Array[Byte] = {
-          val v = node.get(field)
-          if (v == null || v.isNull) null else v.asText().getBytes(UTF_8)
-        }
-        val headers = node.get("headers") match {
-          case null => null
-          case hs if hs.isNull => null
-          case hs => new GenericArrayData(hs.elements().asScala.map { h =>
-            new GenericInternalRow(Array[Any](
-              UTF8String.fromString(h.get("key").asText()),
-              h.get("value").asText().getBytes(UTF_8)))
-          }.toArray[Any])
-        }
-        val tsMs = if (node.has("timestamp")) node.get("timestamp").asLong() else 0L
-        val row = new GenericInternalRow(Array[Any](
-          bytes("key"), bytes("value"),
-          UTF8String.fromString(p.topic), p.partition, p.baseOffset + lineNo,
-          tsMs * 1000L, 0, headers))
+        nextLine()
+        row = envelope.parse(lines.buf, lines.start, lines.end, topic, p.partition,
+          p.baseOffset + lineNo)
         lineNo += 1
-        row
+        true
       }
 
-      override def close(): Unit = reader.close()
+      override def get(): InternalRow = row
+      override def close(): Unit = in.close()
     }
+  }
+}
+
+/** `\n`-terminated lines of a byte stream, each exposed in place as
+  * `buf[start, end)` without its `\n` until the next call.
+  */
+private[sources] final class LineReader(in: InputStream) {
+  var buf = new Array[Byte](1 << 16)
+  var start = 0
+  var end = 0
+  private var pos = 0
+  private var limit = 0
+
+  def next(): Boolean = {
+    var i = pos
+    while (true) {
+      while (i < limit) {
+        if (buf(i) == '\n') {
+          start = pos; end = i; pos = i + 1
+          return true
+        }
+        i += 1
+      }
+      // no '\n' in the window: keep the partial line and read more
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, limit - pos)
+        i -= pos; limit -= pos; pos = 0
+      }
+      if (limit == buf.length) buf = util.Arrays.copyOf(buf, buf.length * 2)
+      val n = in.read(buf, limit, buf.length - limit)
+      if (n < 0) return false
+      limit += n
+    }
+    false
+  }
+}
+
+/** One JSON envelope line → an envelope row, with Jackson's streaming parser
+  * straight over the line's bytes. String fields go to UTF-8 bytes through
+  * one reused encoder (invalid surrogates become '?', as `String.getBytes`
+  * does); a field that is absent or JSON null is null, timestamp 0.
+  */
+private[sources] final class EnvelopeParser {
+  private val json = new JsonFactory
+  private val encoder = UTF_8.newEncoder()
+    .onMalformedInput(CodingErrorAction.REPLACE)
+    .onUnmappableCharacter(CodingErrorAction.REPLACE)
+  private var out = ByteBuffer.allocate(1024)
+
+  def parse(buf: Array[Byte], start: Int, end: Int, topic: UTF8String, partition: Int,
+      offset: Long): InternalRow = {
+    val jp = json.createParser(buf, start, end - start)
+    try {
+      var key: Array[Byte] = null
+      var value: Array[Byte] = null
+      var tsMs = 0L
+      var headers: GenericArrayData = null
+      if (jp.nextToken() == JsonToken.START_OBJECT) {
+        while (jp.nextToken() == JsonToken.FIELD_NAME) {
+          val field = jp.currentName()
+          jp.nextToken()
+          field match {
+            case "key" => key = bytes(jp)
+            case "value" => value = bytes(jp)
+            case "timestamp" => tsMs = jp.getValueAsLong
+            case "headers" => headers = parseHeaders(jp)
+            case _ => jp.skipChildren()
+          }
+        }
+      }
+      new GenericInternalRow(Array[Any](key, value, topic, partition,
+        offset, tsMs * 1000L, 0, headers))
+    } finally jp.close()
+  }
+
+  private def parseHeaders(jp: JsonParser): GenericArrayData =
+    if (jp.currentToken() != JsonToken.START_ARRAY) { jp.skipChildren(); null }
+    else {
+      val hs = mutable.ArrayBuffer.empty[Any]
+      while (jp.nextToken() == JsonToken.START_OBJECT) {
+        var k: Array[Byte] = null
+        var v: Array[Byte] = null
+        while (jp.nextToken() == JsonToken.FIELD_NAME) {
+          val field = jp.currentName()
+          jp.nextToken()
+          field match {
+            case "key" => k = bytes(jp)
+            case "value" => v = bytes(jp)
+            case _ => jp.skipChildren()
+          }
+        }
+        hs += new GenericInternalRow(Array[Any](
+          if (k == null) null else UTF8String.fromBytes(k), v))
+      }
+      new GenericArrayData(hs.toArray)
+    }
+
+  /** The current value's text as UTF-8; null for JSON null, "" for a
+    * container (as `JsonNode.asText` reads one).
+    */
+  private def bytes(jp: JsonParser): Array[Byte] = jp.currentToken() match {
+    case JsonToken.VALUE_NULL => null
+    case JsonToken.START_OBJECT | JsonToken.START_ARRAY => jp.skipChildren(); Array.emptyByteArray
+    case _ =>
+      val len = jp.getTextLength
+      val need = len * 3
+      if (out.capacity() < need) out = ByteBuffer.allocate(need)
+      out.clear()
+      encoder.reset()
+      encoder.encode(CharBuffer.wrap(jp.getTextCharacters, jp.getTextOffset, len), out, true)
+      encoder.flush(out)
+      util.Arrays.copyOf(out.array(), out.position())
   }
 }
 
@@ -317,13 +598,16 @@ private[sources] class FileTopicWriterFactory(dir: String, topic: String,
           .append(mapper.writeValueAsString(node)).append('\n')
       }
 
-      /** One segment per (epoch, task, partition); the deterministic name
-        * makes task retries idempotent (same file, same content).
+      /** One segment per (epoch, Spark partition, topic partition). The name
+        * leaves out the attempt's `taskId`, so a retried task or a replayed
+        * epoch rewrites the same file with the same content instead of
+        * adding a second copy of its records.
         */
       override def commit(): WriterCommitMessage = {
         buffers.foreach { case (part, sb) =>
-          val target = Paths.get(dir, s"$topic-$part.e${epochId}t$taskId.jsonl")
-          val tmp = Paths.get(dir, s".$topic-$part.e${epochId}t$taskId.tmp")
+          val segment = f"$topic-$part.e$epochId%019dp$partitionId%05d"
+          val target = Paths.get(dir, s"$segment.jsonl")
+          val tmp = Paths.get(dir, s".$segment.t$taskId.tmp")
           Files.createDirectories(target.getParent)
           Files.write(tmp, sb.toString.getBytes(UTF_8))
           Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,

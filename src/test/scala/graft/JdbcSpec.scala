@@ -1,11 +1,13 @@
 package graft
 
+import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
 import java.nio.file.Files
-import java.sql.DriverManager
+import java.sql.{Connection, Driver, DriverManager, DriverPropertyInfo, PreparedStatement, Statement}
+import java.util.Properties
 
 import org.apache.spark.sql.functions._
 import graft.ops.Text
-import graft.sinks.JdbcSink
+import graft.sinks.{JdbcSink, JdbcUpdateCountUnknownException}
 
 /** DB-to-DB word count (SURVEY §2.1 S3+S8, reference
   * `DatabaseWordCountTest.java` with embedded Derby): JDBC incrementing
@@ -56,13 +58,13 @@ class JdbcSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_jdbc_ckpt_").toString
     val q = JdbcSink.writeStream(counts, url, "WC_OUTPUT", Seq("word"), ckpt)
     try {
-      q.processAllAvailable()
+      awaitDrained(q)
       val mid = query("SELECT word, cnt FROM WC_OUTPUT")(rs => rs.getString(1) -> rs.getLong(2)).toMap
       assert(mid("to") === 3L)   // first two lines only
 
       // rows inserted AFTER the first poll are picked up incrementally
       lines.drop(2).foreach(l => exec(s"INSERT INTO WC_INPUT (lines) VALUES ('$l')"))
-      q.processAllAvailable()
+      awaitDrained(q)
       val fin = query("SELECT word, cnt FROM WC_OUTPUT")(rs => rs.getString(1) -> rs.getLong(2)).toMap
       // golden counts from DatabaseWordCountTest.java:118-126
       assert(fin("to") === 4L); assert(fin("be") === 2L); assert(fin("or") === 2L)
@@ -139,7 +141,7 @@ class JdbcSpec extends SparkSpec {
         JdbcSink.appendBatch(b, url, "FM_OUTPUT")
       }.start()
     try {
-      q.processAllAvailable()
+      awaitDrained(q)
       // 4 fixture lines tokenize to 34 words (reference waits for >= 26)
       assert(query("SELECT count(*) FROM FM_OUTPUT")(_.getLong(1)) === Vector(34L))
       assert(query("SELECT count(*) FROM FM_OUTPUT WHERE word = 'to'")(_.getLong(1)) === Vector(4L))
@@ -159,7 +161,7 @@ class JdbcSpec extends SparkSpec {
     val q = src.writeStream.format("memory").queryName("adm_sink")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      awaitDrained(q)
       assert(spark.table("adm_sink").count() === 10)
       val sizes = q.recentProgress.map(_.numInputRows).filter(_ > 0)
       assert(sizes.nonEmpty && sizes.forall(_ <= 3L), sizes.mkString(","))
@@ -178,7 +180,7 @@ class JdbcSpec extends SparkSpec {
     val q = src.writeStream.format("memory").queryName("gap_sink")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      awaitDrained(q)
       assert(spark.table("gap_sink").count() === 2)
     } finally q.stop()
   }
@@ -242,7 +244,7 @@ class JdbcSpec extends SparkSpec {
         ()
       }.start()
     try {
-      q.processAllAvailable()
+      awaitDrained(q)
       assert(got.size === 4)
       assert(got.keySet === Set(5L, 6L, 7L, 8L))
       assert(got(8L) === "ITEM_8")
@@ -267,15 +269,102 @@ class JdbcSpec extends SparkSpec {
       url, "CK_OUTPUT", Seq("word"), ckpt)
 
     val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    try awaitDrained(q1) finally q1.stop()
     exec("INSERT INTO CK_INPUT (lines) VALUES ('alpha gamma')")
     val q2 = start()
     try {
-      q2.processAllAvailable()
+      awaitDrained(q2)
       val fin = query("SELECT word, cnt FROM CK_OUTPUT")(rs => rs.getString(1) -> rs.getLong(2)).toMap
       assert(fin("alpha") === 2L && fin("beta") === 1L && fin("gamma") === 1L)
       // restarted query's batches never exceeded the new rows
       assert(q2.recentProgress.map(_.numInputRows).filter(_ > 0).forall(_ <= 1L))
     } finally q2.stop()
+  }
+
+  /** Rows per key found by a forced table scan, not through the key's index. */
+  private def scannedRowsPerKey(table: String, keyCols: String): Vector[Long] =
+    query(s"SELECT COUNT(*) FROM $table --DERBY-PROPERTIES index=null\nGROUP BY $keyCols")(
+      _.getLong(1))
+
+  test("overlapping upsert batches leave exactly one row per key, by a forced table scan") {
+    exec("CREATE TABLE SCAN_OUT (k VARCHAR(64) NOT NULL PRIMARY KEY, v BIGINT)")
+    import spark.implicits._
+    // batch b writes keys [40b, 40b + 100) with value b: each batch updates
+    // 60 keys of the previous one and inserts 40, from 4 concurrent partitions
+    (0 until 6).foreach { b =>
+      val batch = (b * 40 until b * 40 + 100).map(i => (f"k$i%03d", b.toLong)).toDF("k", "v")
+        .repartition(4)
+      JdbcSink.upsertBatch(batch, url, "SCAN_OUT", Seq("k"))
+    }
+    val perKey = scannedRowsPerKey("SCAN_OUT", "k")
+    assert(perKey.size === 300 && perKey.forall(_ == 1L), s"rows per key: ${perKey.filter(_ != 1L)}")
+    val rows = query("SELECT k, v FROM SCAN_OUT")(rs => rs.getString(1) -> rs.getLong(2)).toMap
+    assert(rows === (0 until 300).map(i => f"k$i%03d" -> math.min(i / 40, 5).toLong).toMap)
+  }
+
+  test("a table whose columns are all key columns still upserts") {
+    exec("CREATE TABLE KEYS_OUT (a VARCHAR(16) NOT NULL, b INT NOT NULL, PRIMARY KEY (a, b))")
+    import spark.implicits._
+    JdbcSink.upsertBatch(Seq(("x", 1), ("y", 2)).toDF("a", "b"), url, "KEYS_OUT", Seq("a", "b"))
+    JdbcSink.upsertBatch(Seq(("x", 1), ("z", 3)).toDF("a", "b"), url, "KEYS_OUT", Seq("a", "b"))
+    assert(query("SELECT a, b FROM KEYS_OUT ORDER BY a")(rs => rs.getString(1) -> rs.getInt(2)) ===
+      Vector("x" -> 1, "y" -> 2, "z" -> 3))
+    assert(scannedRowsPerKey("KEYS_OUT", "a, b").forall(_ == 1L))
+  }
+
+  test("a driver that reports SUCCESS_NO_INFO fails the upsert by name and rolls it back") {
+    exec("CREATE TABLE NOINFO_OUT (k VARCHAR(64) NOT NULL PRIMARY KEY, v BIGINT)")
+    exec("INSERT INTO NOINFO_OUT VALUES ('a', 1)")
+    DriverManager.registerDriver(JdbcSpec.NoInfoDriver)
+    import spark.implicits._
+    val e = intercept[Exception] {
+      JdbcSink.upsertBatch(Seq(("a", 5L), ("b", 2L)).toDF("k", "v").coalesce(1),
+        JdbcSpec.NoInfoDriver.Prefix + url.stripPrefix("jdbc:"), "NOINFO_OUT", Seq("k"))
+    }
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[JdbcUpdateCountUnknownException]), e.toString)
+    assert(query("SELECT k, v FROM NOINFO_OUT")(rs => rs.getString(1) -> rs.getLong(2)) ===
+      Vector("a" -> 1L), "the partition's UPDATE was rolled back")
+  }
+}
+
+object JdbcSpec {
+  /** A JDBC driver for `jdbc:graft-noinfo:<url without jdbc:>` that delegates
+    * to the underlying driver but answers every batched UPDATE with
+    * `Statement.SUCCESS_NO_INFO`, as some drivers do.
+    */
+  object NoInfoDriver extends Driver {
+    val Prefix = "jdbc:graft-noinfo:"
+    private def proxy[A](iface: Class[A], target: AnyRef)(
+        around: (Method, Array[AnyRef], () => AnyRef) => AnyRef): A =
+      iface.cast(Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](iface),
+        new InvocationHandler {
+          override def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+            around(m, args, () =>
+              try m.invoke(target, Option(args).getOrElse(Array.empty[AnyRef]): _*)
+              catch { case e: InvocationTargetException => throw e.getCause })
+        }))
+
+    override def connect(url: String, info: Properties): Connection =
+      if (!acceptsURL(url)) null
+      else proxy(classOf[Connection],
+          DriverManager.getConnection("jdbc:" + url.stripPrefix(Prefix))) { (m, args, call) =>
+        val r = call()
+        if (m.getName == "prepareStatement" && args(0).toString.startsWith("UPDATE"))
+          proxy(classOf[PreparedStatement], r) { (m, _, call) =>
+            val counts = call()
+            if (m.getName != "executeBatch") counts
+            else Array.fill(counts.asInstanceOf[Array[Int]].length)(Statement.SUCCESS_NO_INFO)
+          }
+        else r
+      }
+    override def acceptsURL(url: String): Boolean = url.startsWith(Prefix)
+    override def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
+      Array.empty
+    override def getMajorVersion: Int = 1
+    override def getMinorVersion: Int = 0
+    override def jdbcCompliant(): Boolean = false
+    override def getParentLogger: java.util.logging.Logger =
+      java.util.logging.Logger.getLogger("graft.noinfo")
   }
 }
